@@ -160,20 +160,35 @@ def _dedup_exact(df: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-# ---- bucket→shuffle-partition spread ------------------------------------
-# ``repartition(n, bucket)`` hashes the ~n distinct bucket ids into n
-# partitions: with 32 buckets into 32 partitions only ~18 partitions are
-# non-empty and the worst one carries THREE buckets (measured) — a 3×
-# straggler on the heaviest stage (LWW reduce + delta write) while ~45%
-# of cores idle. The classic too-few-distinct-shuffle-keys skew.
+# ---- bucket→shuffle-partition placement --------------------------------
+# Every bucket-clustered shuffle (MOR merge, COW merge, compaction,
+# rescale) must land each bucket in exactly ONE partition — the
+# partitionBy(_bucket) writer then emits one file per bucket per dir —
+# and should give every task slot an equal share of buckets.
 #
-# Fix: repartition on a per-bucket TOKEN picked so Spark's own
-# partitioner (pmod(murmur3(token), n)) sends every bucket to its own
-# partition. The token column rides as an extra leading GROUP KEY
-# through the clustered reduce (it is a function of the bucket id, so
-# grouping is unchanged, and HashPartitioning(token) satisfies the
-# aggregate's ClusteredDistribution over any key superset — the
-# single-Exchange plan shape is preserved, now perfectly balanced).
+# ``repartition(n, bucket)`` does neither well: it hashes the ~n
+# distinct bucket ids into n partitions, and with 32 buckets into 32
+# partitions only ~18 are non-empty while the worst carries THREE
+# buckets (measured). One partition per bucket is no better on a small
+# host: 33 reduce tasks on 4 cores run in 9 waves of short tasks whose
+# fixed launch cost dominates.
+#
+# So :func:`_place_buckets` packs the buckets onto
+# P = min(#buckets (+1 for the dead-letter pseudo-bucket), slots)
+# partitions, slots = ``sparkContext.defaultParallelism``: bucket rank
+# r goes to partition r mod P, via a per-partition TOKEN picked so
+# Spark's own partitioner (pmod(murmur3(token), P)) sends it exactly
+# there. Partition loads differ by at most one bucket, and one task per
+# slot runs the whole reduce in a single wave.
+#
+# The token column rides as the LAST group key of the clustered fold:
+# it is a function of the bucket id, so grouping is unchanged, and
+# HashPartitioning(token) satisfies the aggregate's ClusteredDistribution
+# over any key superset (one Exchange). Keys ordered
+# ``(_bucket, keys…, _part_spread)`` make the fold's own sort — the LWW
+# max(struct) has no fixed-width buffer, so it plans as a SortAggregate —
+# already satisfy the writer's _bucket ordering and compaction's
+# (_bucket, key) file sort: one Sort per write.
 
 SPREAD_COL = "_part_spread"
 
@@ -222,37 +237,55 @@ def _spread_tokens(n_parts: int) -> list[int]:
     return got
 
 
-def _spread_expr(
-    bucket_ids: list[int], n_parts: int | None = None, dead_token: bool = False
-):
-    """Column mapping each bucket id to its spread token. Bucket ids get
-    partition ranks in sorted order; ``dead_token=True`` additionally
-    routes :data:`DEAD_BUCKET` rows to one extra partition of their own
-    (pass ``n_parts`` = len(bucket_ids) + 1 in that case)."""
+def _spread_expr(bucket_ids: list[int], n_parts: int, dead_token: bool = False):
+    """Column mapping each bucket id to the spread token of its
+    partition. Bucket ids get ranks in sorted order and rank r goes to
+    partition r mod ``n_parts``; ``dead_token=True`` ranks
+    :data:`DEAD_BUCKET` rows after the real buckets."""
     ordered = sorted(bucket_ids)
-    n = n_parts or (len(ordered) + (1 if dead_token else 0))
-    tokens = _spread_tokens(max(n, 1))
+    tokens = _spread_tokens(n_parts)
+
+    def tok(rank: int):
+        return F.lit(tokens[rank % n_parts])
+
     if not ordered:
-        return F.lit(tokens[0]).cast("int")
+        return tok(0).cast("int")
     expr = None
     if dead_token:
-        expr = F.when(
-            F.col(BUCKET_COL) == DEAD_BUCKET, F.lit(tokens[len(ordered)])
-        )
-    if ordered and ordered == list(range(len(ordered))):
+        expr = F.when(F.col(BUCKET_COL) == DEAD_BUCKET, tok(len(ordered)))
+    if ordered == list(range(len(ordered))):
         # dense 0..n-1 domain: O(1) array lookup instead of a CASE chain
-        arr = F.array(*[F.lit(tokens[p]) for p in range(len(ordered))])
+        arr = F.array(*[tok(r) for r in range(len(ordered))])
         dense = F.element_at(arr, F.col(BUCKET_COL) + 1)
         expr = expr.otherwise(dense) if expr is not None else dense
         return expr.cast("int")
     for rank, b in enumerate(ordered):
-        branch = F.when(F.col(BUCKET_COL) == b, F.lit(tokens[rank]))
-        expr = branch if expr is None else expr.when(
-            F.col(BUCKET_COL) == b, F.lit(tokens[rank])
+        hit = F.col(BUCKET_COL) == b
+        expr = F.when(hit, tok(rank)) if expr is None else expr.when(
+            hit, tok(rank)
         )
-    return (
-        expr.cast("int") if expr is not None else F.lit(0).cast("int")
-    )
+    return expr.cast("int")
+
+
+def _task_slots(spark: SparkSession) -> int:
+    """Task slots the session has (cores across executors)."""
+    return max(spark.sparkContext.defaultParallelism, 1)
+
+
+def _place_buckets(
+    df: DataFrame, bucket_ids: list[int], dead_token: bool = False
+) -> DataFrame:
+    """The one bucket-placement decision for every bucket-clustered
+    shuffle: add :data:`SPREAD_COL` and repartition on it into
+    P = min(#buckets, task slots) partitions (the dead pseudo-bucket
+    counts as one more bucket), each bucket in exactly one partition,
+    loads within one bucket of each other. Callers fold with
+    ``SPREAD_COL`` as the last group key and drop it before writing."""
+    n = len(bucket_ids) + (1 if dead_token else 0)
+    n_parts = max(min(n, _task_slots(df.sparkSession)), 1)
+    return df.withColumn(
+        SPREAD_COL, _spread_expr(bucket_ids, n_parts, dead_token)
+    ).repartition(n_parts, F.col(SPREAD_COL))
 
 
 @dataclass
@@ -1550,18 +1583,21 @@ class MiniLakeTable:
     ) -> DataFrame:
         """Per-key state resolution under the table's merge engine: the
         LWW whole-row reduce by default, the column-coalescing partial
-        fold for ``merge_engine='partial'`` tables. Both are ONE hash
-        aggregation over the same clustering; every resolve site (read,
-        merge pre-reduce, compaction, rescale, net diff) dispatches here
-        so the engines stay interchangeable.
+        fold for ``merge_engine='partial'`` tables. Both are ONE
+        aggregation over the same clustering (for LWW a partial + final
+        SortAggregate: the max(struct) buffer holds strings, so it has
+        no fixed-width hash layout; over a bucket-clustered input both
+        run after the one Exchange); every resolve site (read, merge
+        pre-reduce, compaction, rescale, net diff) dispatches here so
+        the engines stay interchangeable.
 
         ``lineage=True`` (delta pre-reduce / compaction / rescale on a
         ``row_lineage`` table) additionally maintains the per-key
         ``_birth_lsn``/``_tomb_lsn`` summaries — the sites that DISCARD
         loser events must fold lineage into the survivors or it is lost
         forever. Plain reads never pass it: the state view doesn't need
-        birth, and the lineage fold trades the pure hash aggregation for
-        a window + aggregation (one sort more) inside the same single
+        birth, and the lineage fold adds a window over the group keys
+        (whose sort the aggregation reuses) inside the same single
         Exchange.
 
         ``payload_subset`` (projected reads, lww engine only) folds over
@@ -3033,18 +3069,12 @@ class MiniLakeTable:
             # tests). Update-heavy batches shrink the delta by
             # |batch|/|keys| before hitting disk, which cuts write AND
             # compaction I/O (measured ~30% off replay+compact wall at
-            # sf0.1). The spread token (see _spread_expr) gives every
-            # bucket its own shuffle partition — repartitioning on the
-            # raw bucket id hash-collides ~45% of partitions empty with
-            # 3-bucket stragglers.
-            fused = valid_col is not None
-            n_parts = n_buckets + (1 if fused else 0)
-            clustered = batch_phys.withColumn(
-                SPREAD_COL,
-                _spread_expr(
-                    list(range(n_buckets)), n_parts, dead_token=fused
-                ),
-            ).repartition(n_parts, F.col(SPREAD_COL))
+            # sf0.1). _place_buckets packs the buckets (and the dead-
+            # letter pseudo-bucket) onto one partition per task slot.
+            clustered = _place_buckets(
+                batch_phys, list(range(n_buckets)),
+                dead_token=valid_col is not None,
+            )
             if valid_col is not None:
                 # Single-branch fusion: dead rows ride the SAME clustered
                 # LWW aggregate under a synthetic per-row grouping key
@@ -3069,7 +3099,7 @@ class MiniLakeTable:
                     VALID_COL
                 )
                 fused_keys = (
-                    [SPREAD_COL, BUCKET_COL] + list(key_cols) + ["_dlq_key"]
+                    [BUCKET_COL] + list(key_cols) + ["_dlq_key", SPREAD_COL]
                 )
                 fused_payload = payload_cols + [
                     DELETED_COL, SRC_OP_COL, RAW_COL,
@@ -3113,11 +3143,11 @@ class MiniLakeTable:
                     # clustering, map-side combined: no extra exchange.
                     clustered = _dedup_exact(
                         clustered,
-                        [SPREAD_COL, BUCKET_COL] + list(key_cols) + [LSN_COL],
+                        [BUCKET_COL] + list(key_cols) + [LSN_COL, SPREAD_COL],
                     )
                 merged = self._fold(
                     clustered, base,
-                    keys=[SPREAD_COL, BUCKET_COL] + list(key_cols),
+                    keys=[BUCKET_COL] + list(key_cols) + [SPREAD_COL],
                     lineage=True,
                 ).drop(SPREAD_COL)
             touched = None  # discovered post-write
@@ -3158,14 +3188,12 @@ class MiniLakeTable:
                 batch_phys = _dedup_exact(
                     batch_phys, [BUCKET_COL] + list(key_cols) + [LSN_COL]
                 )
-            unioned = (
-                current.unionByName(batch_phys)
-                .withColumn(SPREAD_COL, _spread_expr(touched))
-                .repartition(len(touched), F.col(SPREAD_COL))
+            unioned = _place_buckets(
+                current.unionByName(batch_phys), touched
             )
             merged = self._fold(
                 unioned, base,
-                keys=[SPREAD_COL, BUCKET_COL] + list(key_cols),
+                keys=[BUCKET_COL] + list(key_cols) + [SPREAD_COL],
             ).drop(SPREAD_COL)
 
         # In fused mode dead-letter rows flow through the same frame —
@@ -4737,7 +4765,7 @@ class MiniLakeTable:
             target = sorted(int(b) for b in buckets)
             dirs = [d for b in target for d in base["buckets"].get(str(b), [])]
             df = self._read_files(dirs, version=version)
-        # The plain (no zorder, no file-split) path folds INSIDE the one
+        # Without a file split the fold runs INSIDE the one
         # bucket-clustered exchange below — folding by bare key first
         # would shuffle the whole folded state twice (once hash(keys) for
         # the reduce, once hash(bucket) for the layout), and the deltas
@@ -4774,7 +4802,7 @@ class MiniLakeTable:
             1,
             -(-folded_rows // max(target_rows_per_file, 1)),  # ceil div
         )
-        plain = n_out <= max(len(target), 1) and not zorder
+        split = n_out > max(len(target), 1)
         if drop_tombstones and drop_tombstones_for is not None:
             raise ValueError(
                 "drop_tombstones_for requires drop_tombstones=False "
@@ -4803,34 +4831,30 @@ class MiniLakeTable:
             return frame
 
         z_logical = z_physical = None
-        if plain:
-            # one-shuffle fold-and-layout: spread-repartition to one
-            # bucket per partition (see _spread_expr), fold inside that
-            # clustering, write — instead of shuffling the whole state
-            # once for the key fold and again for the bucket layout
-            clustered = df.withColumn(
-                SPREAD_COL, _spread_expr(target, max(len(target), 1))
-            ).repartition(max(len(target), 1), F.col(SPREAD_COL))
+        if not split:
+            # one-shuffle fold-and-layout: pack the buckets onto the task
+            # slots (_place_buckets), fold inside that clustering, write —
+            # instead of shuffling the whole state once for the key fold
+            # and again for the bucket layout. The scan is coalesced to
+            # one task per slot first: deltas are many small per-bucket
+            # files, and one-file scan tasks cost more to launch than to
+            # run.
+            df = _place_buckets(df.coalesce(_task_slots(self.spark)), target)
             if fold_clustered:
-                clustered = self._fold(
-                    clustered, base,
-                    keys=[SPREAD_COL, BUCKET_COL] + list(base["key_cols"]),
+                df = self._fold(
+                    df, base,
+                    keys=[BUCKET_COL] + list(base["key_cols"]) + [SPREAD_COL],
                     lineage=True,
                 )
-            # NOTE: dropping tombstones is only safe once no straggler
-            # event below MAX_LSN can still arrive — a dropped tombstone
-            # cannot out-LWW a later stale update. Mid-stream compaction
-            # keeps them.
-            clustered = _drop_tombs(clustered).drop(SPREAD_COL)
-        else:
-            if fold_clustered:
-                df = (
-                    self._fold(df, base, lineage=True)
-                    .withColumn(
-                        BUCKET_COL, self._bucket_expr(key0, n_buckets)
-                    )
-                )
-            df = _drop_tombs(df)
+            df = df.drop(SPREAD_COL)
+        elif fold_clustered:
+            df = self._fold(df, base, lineage=True).withColumn(
+                BUCKET_COL, self._bucket_expr(key0, n_buckets)
+            )
+        # NOTE: dropping tombstones is only safe once no straggler event
+        # below MAX_LSN can still arrive — a dropped tombstone cannot
+        # out-LWW a later stale update. Mid-stream compaction keeps them.
+        df = _drop_tombs(df)
         if zorder:
             if not cluster_cols:
                 raise ValueError("zorder requires cluster_cols")
@@ -4889,37 +4913,33 @@ class MiniLakeTable:
                 mins,
                 maxs,
             )
-        if not plain:
-            if n_out > max(len(target), 1):
-                # range partitioning costs one sampling pass over the
-                # folded frame to place boundaries — pay it only when a
-                # bucket actually outgrew the target file size
-                clustered = df.repartitionByRange(
-                    n_out,
-                    F.col(BUCKET_COL),
-                    *(
-                        [z_logical]
-                        if z_logical is not None
-                        else [F.col(c) for c in split_cols]
-                    ),
-                )
-            else:
-                clustered = df.repartition(
-                    max(len(target), 1), F.col(BUCKET_COL)
-                )
-        writer = (
-            self._to_physical(
-                clustered,
-                schema,
+        if split:
+            # range partitioning costs one sampling pass over the folded
+            # frame to place boundaries — pay it only when a bucket
+            # actually outgrew the target file size
+            df = df.repartitionByRange(
+                n_out,
+                F.col(BUCKET_COL),
+                *(
+                    [z_logical]
+                    if z_logical is not None
+                    else [F.col(c) for c in split_cols]
+                ),
             )
+        writer = (
+            self._to_physical(df, schema)
             # Clustered row groups: compaction is the long-lived layout,
             # so pay one local sort here — by key (default: point
             # lookups prune row groups on tight key min/max) or by the
-            # caller's cluster_cols (range scans prune files on tight
-            # secondary bounds). Deltas stay unsorted — they are
-            # short-lived by design.
+            # caller's cluster_cols / z-value (range scans prune files
+            # on tight secondary bounds). Deltas stay unsorted — they
+            # are short-lived by design. The bucket leads the sort: a
+            # partition holds several buckets, and the writer needs
+            # them contiguous — on the plain path the fold's own sort
+            # already provides (bucket, key), so this Sort plans away.
             .sortWithinPartitions(
-                *([z_physical] if z_physical is not None else sort_pcols)
+                BUCKET_COL,
+                *([z_physical] if z_physical is not None else sort_pcols),
             )
             .write.partitionBy(BUCKET_COL)
             # parquet bloom filter on the key: equality pushdown skips
@@ -5077,27 +5097,27 @@ class MiniLakeTable:
         version = base["version"]
         key0 = base["key_cols"][0]
         schema = schema_from_manifest(base["schema"])
-        df = self.read_physical()
-        if base.get("write_mode", "cow") == "mor":
-            df = self._fold(df, base, lineage=True)
-        df = df.withColumn(
-            BUCKET_COL, self._bucket_expr(key0, n_buckets_new)
+        # the new bucket is a function of the key, so the fold runs
+        # inside the new layout's clustering: one shuffle, as in compact()
+        df = _place_buckets(
+            self.read_physical()
+            .coalesce(_task_slots(self.spark))
+            .withColumn(BUCKET_COL, self._bucket_expr(key0, n_buckets_new)),
+            list(range(n_buckets_new)),
         )
+        if base.get("write_mode", "cow") == "mor":
+            df = self._fold(
+                df, base,
+                keys=[BUCKET_COL] + list(base["key_cols"]) + [SPREAD_COL],
+                lineage=True,
+            )
         out_dir = os.path.join(
             self.data_dir, f"rescale-{version + 1:06d}-{uuid.uuid4().hex[:12]}"
         )
         pkey0 = {f.name: physical_name(f) for f in schema.fields}[key0]
         (
-            self._to_physical(
-                df.withColumn(
-                    SPREAD_COL,
-                    _spread_expr(list(range(n_buckets_new)), n_buckets_new),
-                )
-                .repartition(n_buckets_new, F.col(SPREAD_COL))
-                .drop(SPREAD_COL),
-                schema,
-            )
-            .sortWithinPartitions(pkey0)
+            self._to_physical(df.drop(SPREAD_COL), schema)
+            .sortWithinPartitions(BUCKET_COL, pkey0)
             .write.partitionBy(BUCKET_COL)
             .option(f"parquet.bloom.filter.enabled#{pkey0}", "true")
             .mode("overwrite")

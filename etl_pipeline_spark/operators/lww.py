@@ -7,15 +7,19 @@ by LSN** (order-critical, BASELINE.json north_rule): for each
 
 Physical strategy — scale notes:
 
-- ``max_by(struct(*payload), lsn)`` group aggregation, NOT a
-  ``row_number`` window. A window forces a full shuffle + per-partition
-  sort of *all* events; hash aggregation gets map-side partial
-  aggregation for free, so each input partition collapses its local
-  duplicates per key before anything crosses the wire. At 10^10 events
-  with heavy per-key update traffic this is the difference between
-  shuffling 10^10 rows and shuffling ~|distinct keys| rows.
-- Partial aggregation is also the built-in skew defense: a hot
-  ``conv_id`` collapses to ≤1 row per map task before the shuffle.
+- ``max(struct(lsn, *payload))`` group aggregation, NOT a
+  ``row_number`` window. The struct buffer holds strings, so it has no
+  fixed-width layout and Spark plans it as a partial + final
+  **SortAggregate**, not a hash aggregation. On unclustered input the
+  partial runs before the shuffle, so each input partition collapses
+  its local duplicates per key before anything crosses the wire — at
+  10^10 events with heavy per-key update traffic that is the
+  difference between shuffling 10^10 rows and ~|distinct keys| rows.
+  The lake's merge and compaction folds run on input already clustered
+  by the bucket Exchange, so there both aggregates sit after it, over
+  one sort on the group keys that the bucket-partitioned write reuses.
+- Partial aggregation is also a skew defense on unclustered input: a
+  hot ``conv_id`` collapses to ≤1 row per map task before the shuffle.
   The explicit **salted two-phase** variant exists for the adversarial
   case (one hot key spread across thousands of map tasks whose partials
   still all land on one reducer) and per north_rule's explicit-skew-
@@ -99,10 +103,11 @@ def lww_reduce_with_lineage(
     exactly like Iceberg's lineage (pinned in tests).
 
     Physical strategy: one key-partitioned window (max tombstone per
-    key) + the same hash aggregation as :func:`lww_reduce`, both inside
-    ONE Exchange on the grouping keys — the window adds a sort within
-    partitions but no extra shuffle. Losing events never cross a fold
-    boundary, so the summary is O(live keys) like the LWW state itself.
+    key) + the same sort aggregation as :func:`lww_reduce`, both inside
+    ONE Exchange on the grouping keys — the aggregation reuses the
+    window's sort on the keys, so neither adds a shuffle. Losing events
+    never cross a fold boundary, so the summary is O(live keys) like the
+    LWW state itself.
 
     Output: ``keys + payload_cols + [order_col, birth_col, tomb_col]``.
     """

@@ -2,8 +2,8 @@
 
 The 100 TB contract isn't "returns the right rows" — it's "returns the
 right rows with the plan you'd want": filters reaching the Parquet scan,
-projections pruned to the read schema, small sides broadcast, hash
-aggregation with map-side partials (never a sort for LWW), whole-stage
+projections pruned to the read schema, small sides broadcast, a partial +
+final aggregation for LWW (never a row_number window), whole-stage
 codegen spans wide. These helpers make those properties assertable in
 tests so a regression in plan shape fails CI, not a cluster bill.
 """

@@ -60,6 +60,11 @@ def get_spark(
         # micro-batch changelog files are tens of MB; default 128MB splits
         # would pin each batch's map side to one task
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        # table reads name their dirs from the manifest (a compaction of
+        # a 32-bucket table with one delta each passes 64); past the
+        # default threshold of 32 Spark lists them with a Spark job of
+        # one task per dir, which costs far more than listing them here
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
