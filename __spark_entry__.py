@@ -31,6 +31,9 @@ _SHIPPED: set[str] = set()
 # statistics, which silently disables every timestamp-stats-dependent
 # surface (expire_rows footer classification, read_range/z-order file
 # pruning). TIMESTAMP_MICROS restores footer stats; values are unchanged.
+# session.py's generated-code cache size is a static conf and cannot be
+# set here: a caller's session keeps Spark's default (a speed, not a
+# correctness, difference).
 _REQUIRED_SQL_CONF = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }

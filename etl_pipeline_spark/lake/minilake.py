@@ -1645,6 +1645,29 @@ class MiniLakeTable:
             payload_cols=payload + [DELETED_COL],
         )
 
+    def _fold_scan(
+        self, df: DataFrame, m: dict, payload_subset: list[str] | None = None
+    ) -> DataFrame:
+        """Fold a snapshot scan the way :meth:`compact` does: the scan
+        coalesced to one task per slot (deltas are many small per-bucket
+        files, each otherwise its own scan task), the buckets packed onto
+        the slots (:func:`_place_buckets`), and the fold run inside that
+        clustering with keys ``(_bucket, keys…, _part_spread)`` — one
+        Exchange, no ``spark.sql.shuffle.partitions`` reduce. The helper
+        columns are dropped again."""
+        df = _place_buckets(
+            df.coalesce(_task_slots(self.spark)).withColumn(
+                BUCKET_COL,
+                self._bucket_expr(m["key_cols"][0], m["n_buckets"]),
+            ),
+            list(range(m["n_buckets"])),
+        )
+        return self._fold(
+            df, m,
+            keys=[BUCKET_COL] + list(m["key_cols"]) + [SPREAD_COL],
+            payload_subset=payload_subset,
+        ).drop(BUCKET_COL, SPREAD_COL)
+
     def read(
         self,
         version: int | None = None,
@@ -1728,7 +1751,7 @@ class MiniLakeTable:
             and _dirs
             and snapshot_is_resolved(m, dirs=_dirs)
         ):
-            phys = self._fold(phys, m, payload_subset=out_cols)
+            phys = self._fold_scan(phys, m, payload_subset=out_cols)
         return phys.filter(~F.col(DELETED_COL)).select(*out_cols)
 
     def read_tombstones(self, version: int | None = None) -> DataFrame:
@@ -1742,7 +1765,7 @@ class MiniLakeTable:
         cols = [f.name for f in schema.fields]
         phys = self.read_physical(version)
         if m.get("write_mode", "cow") == "mor":
-            phys = self._fold(phys, m)
+            phys = self._fold_scan(phys, m)
         return phys.filter(F.col(DELETED_COL)).select(
             *m["key_cols"], LSN_COL
         )

@@ -66,9 +66,10 @@ class ApplyConfig:
     # ~15% of steady batch wall, 2,000 needless scan jobs per 10^10
     # events). Cadence 1, or a direct apply_batch call with no memo,
     # restores the probe-every-batch behavior. Worst case on skew
-    # ONSET mid-stream: up to N-1 batches merge unsalted — the LWW
-    # hash-agg stays correct (map-side partials), only its balance
-    # suffers until the next probe.
+    # ONSET mid-stream: up to N-1 batches merge unsalted — the merge's
+    # LWW fold (a partial + final SortAggregate, both after the one
+    # bucket Exchange) stays correct, only its balance suffers until the
+    # next probe.
     skew_probe_every: int = 4
     # The minilake MERGE resolves LWW itself: MOR mode bucket-clusters +
     # LWW-reduces the batch inside its one delta-write shuffle (measured:
@@ -290,8 +291,9 @@ def apply_batch(
         # partial updates into ONE row image (dropping columns the last
         # event didn't carry) and destroy an agg table's per-event sum
         # contributions — the merge's internal fold IS the pre-reduce
-        # for these tables, and its map-side partial aggregation is the
-        # same hot-key collapse the salted path provides
+        # for these tables. It runs after the merge's one bucket
+        # Exchange, so a hot key's events still reach one task: these
+        # tables give up the salted path's balance, not correctness
         if getattr(table, "requires_unique_source", False):
             raise ValueError(
                 "partial/agg merge engines are unsupported on backends "

@@ -4,7 +4,11 @@ Local-mode defaults mirror what we would set per-executor on a real
 cluster: AQE on (skew-join splitting + partition coalescing), Arrow
 enabled for the pandas-UDF cleaning path, shuffle partitions sized to
 cores (not the 200 default), UTC session timezone so results compare
-bit-for-bit against the DuckDB oracle.
+bit-for-bit against the DuckDB oracle. Spark's generated-code cache
+(``spark.sql.codegen.cache.maxEntries``) is sized to the engine's
+working set so warm queries reuse their compiled classes; it is a
+static conf, so only sessions built here get it (a caller's session
+passed to ``__spark_entry__`` keeps Spark's default of 100).
 """
 
 from __future__ import annotations
@@ -14,6 +18,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Entries in Spark's JVM-wide LRU cache of generated classes (Spark's
+# default is 100). One pass over the whole queries.QUERIES registry
+# (sf0.01) plus a CDC replay and compaction compiles 1,599 distinct
+# classes (read from CodegenMetrics with an unbounded cache; the 12
+# benchmark analytics queries alone need about 185). At 100 every warm
+# pass evicts and recompiles its classes in a cycle, and the JIT then
+# compiles each new class again. 4096 leaves headroom for plan shapes
+# that change with data size, and for Guava's per-segment LRU (4
+# segments of 1,024). Static: it must be on the builder.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -45,6 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # INT96 (Spark's legacy default) is deprecated in the Parquet

@@ -6,8 +6,9 @@ one partition per bucket runs many short waves on a host with fewer
 cores than buckets. The spread token packs bucket rank r into partition
 r mod P, P = min(#buckets, task slots), while keeping the single-
 Exchange clustered-reduce plan. These tests pin the machinery it rests
-on, the packing, and the one-file-per-bucket layout and one-Sort plans
-of the merge and compaction writes built on it.
+on, the packing, the one-file-per-bucket layout and one-Sort plans
+of the merge and compaction writes built on it, and the LWW-folding
+read that packs the same way.
 """
 
 from __future__ import annotations
@@ -245,3 +246,37 @@ def test_packed_compaction_layout_and_plan(spark, packed_table):
         (r["conv_id"], r["turn_idx"]): r["text"] for r in t.read().collect()
     }
     assert after == before and len(after) == 700 * 5
+
+
+def test_packed_read_folds_like_compaction(spark, packed_table):
+    """An LWW-folding read of live deltas (32 buckets, two delta dirs
+    each) coalesces its 64-file scan to the task slots and folds inside
+    the bucket packing: one Exchange, no stage wider than the slots."""
+    t = packed_table
+    # both batches carry the same texts; per key the last (highest-LSN)
+    # row of a batch wins
+    expected = {(f"c{i % 700}", (i // 700) % 5): f"t{i}" for i in range(5_000)}
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    group = "spread-packed-read"
+    sc.setJobGroup(group, "packed LWW read")
+    try:
+        df = t.read()
+        got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in df.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == expected
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    ).split("\n\n", 1)[0]
+    if "== Initial Plan ==" in plan:
+        plan = plan.split("== Initial Plan ==", 1)[1]
+    assert _count_nodes(plan, "Exchange") == 1, plan
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    widths = [s.numTasks for s in stages if s is not None]
+    assert widths and max(widths) <= slots, widths
