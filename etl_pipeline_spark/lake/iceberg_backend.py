@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schema import DELETED_COL, LSN_COL
-from .minilake import HIGHWATER_PROP, MergeResult  # fence-prop name shared
+from .minilake import FENCES_PROP, MergeResult  # fence-prop name shared
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -114,7 +114,7 @@ class IcebergTable:
         ).collect()
         props = {r["key"]: r["value"] for r in rows}
         fences = json.loads(props.get("engine.fences", "{}"))
-        return {HIGHWATER_PROP: fences}
+        return {FENCES_PROP: fences}
 
     def current_version(self) -> int:
         rows = self.spark.sql(
@@ -151,7 +151,7 @@ class IcebergTable:
         assert_unique_keys: bool = False,
         pre_commit=None,
     ) -> MergeResult:
-        fences = self.snapshot_props()[HIGHWATER_PROP]
+        fences = self.snapshot_props()[FENCES_PROP]
         if batch_id <= fences.get(stream_id, -1):
             return MergeResult(
                 skipped=True,
@@ -165,7 +165,7 @@ class IcebergTable:
             # commits batch-ordered; re-check the fence afterwards in
             # case a concurrent replay landed this batch while we waited.
             pre_commit()
-            fences = self.snapshot_props()[HIGHWATER_PROP]
+            fences = self.snapshot_props()[FENCES_PROP]
             if batch_id <= fences.get(stream_id, -1):
                 return MergeResult(
                     skipped=True, reason="fenced",

@@ -81,7 +81,6 @@ from ..schema import (
 )
 
 FENCES_PROP = "engine.fences"  # {stream_id: batch-id high-water}
-HIGHWATER_PROP = FENCES_PROP  # backwards-compat alias for importers
 MAX_LSN_PROP = "engine.max-lsn"
 # physical column names retired by drop_column — add_columns must never
 # reuse them (Iceberg field-id semantics: re-added columns read fresh)
@@ -136,6 +135,8 @@ SRC_OP_COL = "_src_op"  # original op string preserved for dead letters
 # fails the cast nulls out there), _raw never does
 RAW_COL = "_raw"
 VALID_COL = "_valid"
+# fold key that keeps each dead row its own group (valid rows: null)
+DLQ_KEY_COL = "_dlq_key"
 
 
 class CommitConflict(RuntimeError):
@@ -319,10 +320,12 @@ class MiniLakeTable:
 
     @property
     def merge_engine(self) -> str:
-        """'lww' (whole-row last-writer-wins, default) or 'partial'
-        (column-coalescing — operators/partial_update.py). The pipeline
-        reads this to skip its whole-row pre-reduce, which would
-        collapse a batch's partial updates into one row image."""
+        """'lww' (whole-row last-writer-wins, default), 'partial'
+        (column-coalescing — operators/partial_update.py) or 'agg'
+        (per-column sum/min/max/last states — operators/agg_engine.py).
+        The pipeline reads this to skip its whole-row pre-reduce, which
+        would collapse a batch's partial updates into one row image and
+        drop an agg table's per-event contributions."""
         return self.manifest().get("merge_engine", "lww")
 
     @property
@@ -341,9 +344,9 @@ class MiniLakeTable:
         """MOR tables can write dead-letter rows inside the merge's one
         delta-write job (merge(valid_col=..., dead_sink=...)) instead of
         a second O(batch) source re-scan (pipeline.apply_batch reads
-        this flag). Partial-engine tables use the separate-write DLQ
-        path — their fold invalidates per-column payload, which would
-        destroy dead-row forensics."""
+        this flag). Partial- and agg-engine tables use the
+        separate-write DLQ path — their per-column folds would mangle a
+        dead row's payload and destroy its forensics."""
         m = self.manifest()
         return (
             m.get("write_mode", "cow") == "mor"
@@ -1588,8 +1591,9 @@ class MiniLakeTable:
         SortAggregate: the max(struct) buffer holds strings, so it has
         no fixed-width hash layout; over a bucket-clustered input both
         run after the one Exchange); every resolve site (read, merge
-        pre-reduce, compaction, rescale, net diff) dispatches here so
-        the engines stay interchangeable.
+        pre-reduce including the fused dead-letter fold, compaction,
+        rescale, net diff) dispatches here so the engines stay
+        interchangeable.
 
         ``lineage=True`` (delta pre-reduce / compaction / rescale on a
         ``row_lineage`` table) additionally maintains the per-key
@@ -1633,16 +1637,19 @@ class MiniLakeTable:
                     for f in payload_fields
                 },
             )
+        # merge's fused dead-letter frame (lww only) carries the DLQ
+        # forensic columns; they ride the winner struct after _deleted
+        payload += [DELETED_COL] + [
+            c for c in (SRC_OP_COL, RAW_COL) if c in df.columns
+        ]
         if lineage and m.get("properties", {}).get(ROW_LINEAGE_PROP):
             return lww_reduce_with_lineage(
-                df, keys=keys, order_col=LSN_COL,
-                payload_cols=payload + [DELETED_COL],
+                df, keys=keys, order_col=LSN_COL, payload_cols=payload,
                 deleted_col=DELETED_COL,
                 birth_col=BIRTH_COL, tomb_col=TOMB_COL,
             )
         return lww_reduce(
-            df, keys=keys, order_col=LSN_COL,
-            payload_cols=payload + [DELETED_COL],
+            df, keys=keys, order_col=LSN_COL, payload_cols=payload
         )
 
     def _fold_scan(
@@ -2703,7 +2710,7 @@ class MiniLakeTable:
         """Commit a data-free snapshot that only advances the stream's
         fence — the exactly-once path for batches that change no rows
         (fully dead-lettered / empty input). Shared by the COW pre-write
-        and MOR post-write empty-batch paths."""
+        empty-batch path and :meth:`_publish_delta`'s empty delta."""
         while True:
             m2 = dict(base)
             m2["version"] = version + 1
@@ -2743,6 +2750,53 @@ class MiniLakeTable:
                 wall_ms=(time.time() - t0) * 1000,
             )
 
+    def _data_snapshot(
+        self,
+        base: dict,
+        new_buckets: dict,
+        new_dirs: list[str],
+        stream_id: str,
+        batch_id: int,
+        stats: dict,
+        stats_scope: str,
+    ) -> dict:
+        """The next manifest after a data commit on ``base``: the new
+        bucket map and file stats, the stream's fence advanced to
+        ``batch_id``, max-lsn raised, and the write-observed row counts
+        (the exact recount happens in compact(); merges stay cheap)."""
+        return {
+            "version": base["version"] + 1,
+            "snapshot_id": str(uuid.uuid4()),
+            "parent_snapshot_id": base["snapshot_id"],
+            "schema": base["schema"],
+            "key_cols": base["key_cols"],
+            "n_buckets": base["n_buckets"],
+            "write_mode": base.get("write_mode", "cow"),
+            "merge_engine": base.get("merge_engine", "lww"),
+            **({"agg_spec": base["agg_spec"]} if "agg_spec" in base else {}),
+            "buckets": new_buckets,
+            "file_stats": self._stats_for_manifest(
+                base, new_dirs, new_buckets, base["key_cols"][0]
+            ),
+            "properties": {
+                **base["properties"],
+                FENCES_PROP: {
+                    **base["properties"].get(FENCES_PROP, {}),
+                    stream_id: batch_id,
+                },
+                MAX_LSN_PROP: max(
+                    base["properties"].get(MAX_LSN_PROP, -1),
+                    int(stats["max_lsn"]),
+                ),
+            },
+            "stats": {
+                "live_rows": int(stats["live"]),
+                "tombstones": int(stats["dead"]),
+                "stats_scope": stats_scope,
+            },
+            "committed_at": time.time(),
+        }
+
     def merge(
         self,
         source: DataFrame,
@@ -2776,13 +2830,24 @@ class MiniLakeTable:
         (with tombstones retained as soft-delete rows so out-of-order
         stale updates lose; see module docstring).
 
+        MOR batches commit through :meth:`_publish_delta`, the one
+        commit routine WAP publish and branch publish also use: it reads
+        the base at commit time, re-checks the fence (a batch applied
+        meanwhile returns ``skipped``/``fenced`` and its commit dir is
+        removed), raises :class:`CommitConflict` if a rescale changed
+        the bucket layout, and retries other CAS conflicts on the
+        racer's base. A batch with no data rows (all dead-lettered)
+        commits fence-only. COW merges CAS once against the base their
+        write read and raise on conflict.
+
         ``pre_commit`` (callable, optional — **MOR mode only**) enables
         pipelined ingest: the expensive write job runs immediately, then
-        the hook blocks until it is this batch's turn to commit, after
-        which the CAS base is RE-READ so the manifest delta applies on
-        top of whatever predecessors committed meanwhile. Sound for MOR
-        because delta files are independent of the base snapshot; COW
-        reads current state up front and must stay serial (rejected).
+        the hook blocks until it is this batch's turn to commit; the
+        commit then applies the manifest delta on top of whatever
+        predecessors committed meanwhile. Sound for MOR because delta
+        files are independent of the base snapshot; COW reads current
+        state up front and must stay serial (rejected). If the hook
+        raises, the written commit dir is removed.
 
         ``valid_col`` + ``dead_sink`` (**MOR only, together**) enable
         dead-letter fusion: ``source`` contains BOTH valid and dead rows
@@ -2790,8 +2855,10 @@ class MiniLakeTable:
         through the normal clustered LWW reduce; dead rows ride the SAME
         delta-write job in pseudo-bucket ``-1`` (original op preserved
         in ``_src_op``), and that directory is relocated to
-        ``dead_sink`` before the manifest registers buckets — one Spark
-        job per batch, no second O(batch) source scan. Dead rows join
+        ``dead_sink`` after the commit-time fence check passes and
+        before the manifest registers buckets (a batch found fenced
+        relocates nothing) — one Spark job per batch, no second
+        O(batch) source scan. Dead rows join
         the one clustered aggregate under a synthetic per-row grouping
         key, so the plan keeps exactly one scan and one exchange.
         Dead-letter delivery is at-least-once across crash/retry, same
@@ -3072,6 +3139,7 @@ class MiniLakeTable:
             )
         batch_phys = batch_phys.withColumn(BUCKET_COL, bexpr)
         write_mode = base.get("write_mode", "cow")
+        fold_keys = [BUCKET_COL] + list(key_cols) + [SPREAD_COL]
 
         if write_mode == "mor":
             # Merge-on-read: append the batch as per-bucket DELTA files —
@@ -3118,28 +3186,28 @@ class MiniLakeTable:
                 ).otherwise(
                     F.coalesce(F.col(LSN_COL), F.xxhash64(F.col(RAW_COL)))
                 )
-                clustered = clustered.withColumn("_dlq_key", dlq_key).drop(
+                clustered = clustered.withColumn(DLQ_KEY_COL, dlq_key).drop(
                     VALID_COL
                 )
-                fused_keys = (
-                    [BUCKET_COL] + list(key_cols) + ["_dlq_key", SPREAD_COL]
+                fold_keys.insert(-1, DLQ_KEY_COL)
+            elif engine == "agg":
+                # duplicate delivery dedup (exact (key, lsn) collapse)
+                # BEFORE the fold — a sum would double-count what the
+                # other engines absorb idempotently. Same bucket
+                # clustering, map-side combined: no extra exchange.
+                clustered = _dedup_exact(
+                    clustered,
+                    [BUCKET_COL] + list(key_cols) + [LSN_COL, SPREAD_COL],
                 )
-                fused_payload = payload_cols + [
-                    DELETED_COL, SRC_OP_COL, RAW_COL,
-                ]
-                if base.get("properties", {}).get(ROW_LINEAGE_PROP):
-                    # lineage rides the same fused reduce; dead rows get
-                    # their junk summaries nulled below so the DLQ files
-                    # stay forensics-only
-                    merged = lww_reduce_with_lineage(
-                        clustered,
-                        keys=fused_keys,
-                        order_col=LSN_COL,
-                        payload_cols=fused_payload,
-                        deleted_col=DELETED_COL,
-                        birth_col=BIRTH_COL,
-                        tomb_col=TOMB_COL,
-                    ).drop("_dlq_key", SPREAD_COL)
+            merged = self._fold(
+                clustered, base, keys=fold_keys, lineage=True
+            ).drop(SPREAD_COL)
+            if valid_col is not None:
+                merged = merged.drop(DLQ_KEY_COL)
+                if base["properties"].get(ROW_LINEAGE_PROP):
+                    # lineage rode the same fused fold; null the dead
+                    # rows' junk summaries so the DLQ files stay
+                    # forensics-only
                     merged = merged.withColumn(
                         BIRTH_COL,
                         F.when(
@@ -3151,29 +3219,6 @@ class MiniLakeTable:
                             F.col(SRC_OP_COL).isNull(), F.col(TOMB_COL)
                         ),
                     )
-                else:
-                    merged = lww_reduce(
-                        clustered,
-                        keys=fused_keys,
-                        order_col=LSN_COL,
-                        payload_cols=fused_payload,
-                    ).drop("_dlq_key", SPREAD_COL)
-            else:
-                if engine == "agg":
-                    # duplicate delivery dedup (exact (key, lsn) collapse)
-                    # BEFORE the fold — a sum would double-count what the
-                    # other engines absorb idempotently. Same bucket
-                    # clustering, map-side combined: no extra exchange.
-                    clustered = _dedup_exact(
-                        clustered,
-                        [BUCKET_COL] + list(key_cols) + [LSN_COL, SPREAD_COL],
-                    )
-                merged = self._fold(
-                    clustered, base,
-                    keys=[BUCKET_COL] + list(key_cols) + [SPREAD_COL],
-                    lineage=True,
-                ).drop(SPREAD_COL)
-            touched = None  # discovered post-write
         else:
             # Copy-on-write needs the touched-bucket set BEFORE reading
             # current state (partition pruning). The batch side is
@@ -3214,10 +3259,9 @@ class MiniLakeTable:
             unioned = _place_buckets(
                 current.unionByName(batch_phys), touched
             )
-            merged = self._fold(
-                unioned, base,
-                keys=[BUCKET_COL] + list(key_cols) + [SPREAD_COL],
-            ).drop(SPREAD_COL)
+            merged = self._fold(unioned, base, keys=fold_keys).drop(
+                SPREAD_COL
+            )
 
         # In fused mode dead-letter rows flow through the same frame —
         # the metrics must count only APPLIED rows (dead rows carry a
@@ -3246,7 +3290,9 @@ class MiniLakeTable:
             # ARE the long-lived state and keep the dictionary
             writer = writer.option("parquet.enable.dictionary", "false")
         writer.mode("overwrite").parquet(out_dir)
-        if touched is None:  # MOR: discover written buckets from the output
+        if write_mode == "mor":
+            # discover the written data buckets from the output; the
+            # dead-letter pseudo-bucket is relocated, never registered
             touched = sorted(
                 b
                 for name in os.listdir(out_dir)
@@ -3254,250 +3300,124 @@ class MiniLakeTable:
                 for b in [int(name.split("=", 1)[1])]
                 if b != DEAD_BUCKET
             )
-            if not touched:
-                # MOR twin of the COW empty-batch path: the write job ran
-                # but produced no DATA bucket dirs (all dead-lettered /
-                # empty upstream). Advance the fence with a fence-only
-                # commit and never touch the Observation — AQE may have
-                # eliminated the CollectMetrics node along with the empty
-                # relation, and obs.get would block forever.
-                if pre_commit is not None:
-                    # Pipelined replay: even a fence-only commit must wait
-                    # its ordered-commit turn. Without this, an empty batch
-                    # k could advance the fence past an in-flight k-1 whose
-                    # data is uncommitted — a crash in that window would
-                    # make resume skip k-1 permanently (data loss), and
-                    # k-1's later commit would regress the fence.
-                    try:
-                        pre_commit()
-                    except Exception:
-                        shutil.rmtree(out_dir, ignore_errors=True)
-                        raise
-                    base = self.manifest()
-                    version = base["version"]
-                    highwater = (
-                        base["properties"].get(FENCES_PROP, {}).get(stream_id, -1)
-                    )
-                    if batch_id <= highwater:  # concurrent replay raced us
-                        # the winning replay wrote its own dead letters
-                        shutil.rmtree(out_dir, ignore_errors=True)
-                        return MergeResult(
-                            skipped=True, reason="fenced",
-                            version=version, snapshot_id=base["snapshot_id"],
-                        )
-                if dead_sink is not None:  # all-dead batch: keep the rows
-                    self._relocate_dead_letters(out_dir, dead_sink)
-                shutil.rmtree(out_dir, ignore_errors=True)
-                if stage_to is not None:
-                    # a staged empty batch parks a data-free descriptor;
-                    # publish_staged turns it into the fence-only commit
-                    # (dead letters above are already relocated — DLQ
-                    # delivery stays at-least-once, same as unstaged)
-                    return self._write_staged(
-                        stage_to, stream_id, batch_id, version,
-                        n_buckets, {}, 0, 0, -1, t0,
-                    )
-                if to_branch is not None:
-                    # an empty branch batch parks a data-free commit so
-                    # the branch-local fence still advances (exactly-once
-                    # includes no-op batches, on branches too)
-                    return self._append_branch_commit(
-                        to_branch, stream_id, batch_id, {}, 0, 0, -1, t0,
-                    )
-                return self._commit_fence_only(
-                    base, version, stream_id, batch_id, t0
-                )
         else:
             batch_phys.unpersist()
 
         if pre_commit is not None:
+            # Pipelined replay: block until it is this batch's commit
+            # turn — a fence-only commit too, or an empty batch k could
+            # advance the fence past an in-flight k-1 whose data is
+            # uncommitted (a crash in that window would make resume skip
+            # k-1). The commit below re-reads the base.
             try:
-                pre_commit()  # block until it is this batch's commit turn
+                pre_commit()
             except Exception:
                 # predecessor batch failed → this commit must not land;
                 # drop the already-written commit dir instead of leaking
                 # an unreferenced directory until retention GC.
                 shutil.rmtree(out_dir, ignore_errors=True)
                 raise
-            # predecessors committed while our write job ran — re-read the
-            # CAS base so the bucket/fence deltas apply on top of theirs
-            base = self.manifest()
-            version = base["version"]
-            highwater = base["properties"].get(FENCES_PROP, {}).get(stream_id, -1)
-            if batch_id <= highwater:  # a concurrent replay raced us
-                shutil.rmtree(out_dir, ignore_errors=True)
-                return MergeResult(
-                    skipped=True, reason="fenced",
-                    version=version, snapshot_id=base["snapshot_id"],
+
+        # Stats via Observation: collected during the write itself — no
+        # extra read-back job over the new files. A write with no data
+        # bucket (all dead-lettered / empty upstream) never touches it:
+        # AQE may have eliminated the CollectMetrics node along with the
+        # empty relation, and obs.get would block forever. If AQE ever
+        # eliminates it anyway, recount from the files just written.
+        if not touched:
+            stats_row = {"live": 0, "dead": 0, "max_lsn": None}
+        else:
+            try:
+                stats_row = obs.get
+            except Exception:
+                stats_row = (
+                    self._read_files(
+                        [
+                            os.path.join(out_dir, f"{BUCKET_COL}={b}")
+                            for b in touched
+                        ],
+                        version=version,
+                    )
+                    .agg(
+                        F.count(F.when(~F.col(DELETED_COL), 1)).alias("live"),
+                        F.count(F.when(F.col(DELETED_COL), 1)).alias("dead"),
+                        F.max(LSN_COL).alias("max_lsn"),
+                    )
+                    .collect()[0]
                 )
+        stats = {
+            "live": int(stats_row["live"]),
+            "dead": int(stats_row["dead"]),
+            "max_lsn": int(stats_row["max_lsn"] or -1),
+        }
 
-        if dead_sink is not None:
-            # after the fence checks (a fenced race drops the whole dir),
-            # before manifest registration (the pseudo-bucket must never
-            # appear as table data)
-            self._relocate_dead_letters(out_dir, dead_sink)
-
-        # The batch's delta, described independently of the CAS base so a
-        # conflicted commit can rebuild its manifest on a fresh base
-        # (data files never change on retry — only the manifest delta).
-        delta_dirs: dict[int, str | None] = {}
-        for b in touched:
-            bucket_dir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
-            delta_dirs[b] = bucket_dir if os.path.exists(bucket_dir) else None
-
-        def _merged_buckets(base_buckets: dict) -> tuple[dict, list[str]]:
-            nb = dict(base_buckets)
-            nd: list[str] = []
-            for b, bucket_dir in delta_dirs.items():
-                if bucket_dir is None:
-                    if write_mode == "cow":
-                        nb[str(b)] = []
-                    continue
-                nd.append(bucket_dir)
-                if write_mode == "mor":  # append delta; never drop history
-                    nb[str(b)] = nb.get(str(b), []) + [bucket_dir]
-                else:  # cow: replace the bucket's files
-                    nb[str(b)] = [bucket_dir]
-            return nb, nd
-
-        # Stats via Observation: collected during the write itself —
-        # no extra read-back job over the new files. Bucket dirs exist
-        # (the empty-write path returned above), so the metric node
-        # should always have fired — but if AQE ever eliminates it
-        # anyway, recount from the files just written rather than
-        # blocking forever on obs.get.
-        try:
-            stats_row = obs.get
-        except Exception:
-            stats_row = (
-                self._read_files(
-                    [os.path.join(out_dir, f"{BUCKET_COL}={b}") for b in touched],
-                    version=version,
-                )
-                .agg(
-                    F.count(F.when(~F.col(DELETED_COL), 1)).alias("live"),
-                    F.count(F.when(F.col(DELETED_COL), 1)).alias("dead"),
-                    F.max(LSN_COL).alias("max_lsn"),
-                )
-                .collect()[0]
+        if write_mode == "cow":
+            # One CAS, no retry: COW read current state against THIS base
+            # — a retry on a new base could resurrect rows another writer
+            # just changed. The caller must redo the merge.
+            new_buckets = dict(base["buckets"])
+            new_dirs: list[str] = []
+            for b in touched:  # replace each touched bucket's files
+                d = os.path.join(out_dir, f"{BUCKET_COL}={b}")
+                new_buckets[str(b)] = [d] if os.path.exists(d) else []
+                new_dirs += new_buckets[str(b)]
+            m2 = self._data_snapshot(
+                base, new_buckets, new_dirs, stream_id, batch_id, stats,
+                "touched_buckets_only" if len(touched) < n_buckets else "full",
             )
-
-        if stage_to is not None:
-            # WAP: the write job is done; park the manifest delta instead
-            # of committing. MOR delta dirs are base-independent, so the
-            # publish can rebase onto whatever commits land meanwhile —
-            # identical soundness argument to the CommitConflict retry.
-            return self._write_staged(
-                stage_to, stream_id, batch_id, version, n_buckets,
-                {str(b): d for b, d in delta_dirs.items() if d is not None},
-                int(stats_row["live"]), int(stats_row["dead"]),
-                int(stats_row["max_lsn"] or -1), t0,
-            )
-        if to_branch is not None:
-            # branch write: the job is done; append the delta as the
-            # branch's next commit instead of CASing main's manifest
-            return self._append_branch_commit(
-                to_branch, stream_id, batch_id,
-                {str(b): d for b, d in delta_dirs.items() if d is not None},
-                int(stats_row["live"]), int(stats_row["dead"]),
-                int(stats_row["max_lsn"] or -1), t0,
-            )
-
-        while True:
-            new_buckets, new_dirs = _merged_buckets(base["buckets"])
-            m2 = {
-                "version": version + 1,
-                "snapshot_id": str(uuid.uuid4()),
-                "parent_snapshot_id": base["snapshot_id"],
-                "schema": base["schema"],
-                "key_cols": key_cols,
-                "n_buckets": n_buckets,
-                "write_mode": write_mode,
-                "merge_engine": base.get("merge_engine", "lww"),
-                **(
-                    {"agg_spec": base["agg_spec"]}
-                    if "agg_spec" in base
-                    else {}
-                ),
-                "buckets": new_buckets,
-                "file_stats": self._stats_for_manifest(
-                    base, new_dirs, new_buckets, key_cols[0]
-                ),
-                "properties": {
-                    **base["properties"],
-                    FENCES_PROP: {
-                        **base["properties"].get(FENCES_PROP, {}),
-                        stream_id: batch_id,
-                    },
-                    MAX_LSN_PROP: max(
-                        base["properties"].get(MAX_LSN_PROP, -1),
-                        int(stats_row["max_lsn"] or -1),
-                    ),
-                },
-                "stats": {
-                    # exact recount happens in compact(); merges stay cheap
-                    # with write-observed stats only
-                    "live_rows": int(stats_row["live"]),
-                    "tombstones": int(stats_row["dead"]),
-                    "stats_scope": "mor_delta" if write_mode == "mor" else (
-                        "touched_buckets_only" if len(touched) < n_buckets else "full"
-                    ),
-                },
-                "committed_at": time.time(),
-            }
             try:
                 self._write_manifest(m2)
-                break
             except CommitConflict:
-                if write_mode != "mor":
-                    # COW read current state against the OLD base — a
-                    # retry on a new base could resurrect rows another
-                    # writer just changed. The caller must redo the merge.
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                # MOR: delta files are base-independent — re-read the
-                # base, re-check the fence, rebuild the manifest delta on
-                # top of the racer's snapshot and CAS again. (The commit
-                # dir keeps its original version prefix — cosmetic; dirs
-                # are referenced by full path.)
-                try:
-                    base = self._reload_after_conflict(version)
-                except CommitConflict:
-                    # torn-orphan livelock surfaced as an error — don't
-                    # leak the unreferenced commit dir while at it
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                version = base["version"]
-                hw = base["properties"].get(FENCES_PROP, {}).get(
-                    stream_id, -1
+                shutil.rmtree(out_dir, ignore_errors=True)
+                raise
+            return MergeResult(
+                skipped=False,
+                version=m2["version"],
+                snapshot_id=m2["snapshot_id"],
+                rows_upserted=stats["live"],
+                rows_deleted=stats["dead"],
+                buckets_touched=len(touched),
+                wall_ms=(time.time() - t0) * 1000,
+            )
+
+        # MOR: the batch's delta, independent of any base snapshot — the
+        # commit can land on whatever snapshot is current when it runs.
+        delta_dirs = {
+            str(b): os.path.join(out_dir, f"{BUCKET_COL}={b}") for b in touched
+        }
+        if stage_to is not None or to_branch is not None:
+            # WAP parks the delta in a staged descriptor; a branch write
+            # appends it as the branch's next commit (an empty delta
+            # still advances the staged / branch-local fence). Dead
+            # letters leave now: there is no later commit of this job.
+            if dead_sink is not None:
+                self._relocate_dead_letters(out_dir, dead_sink)
+            if not delta_dirs:
+                shutil.rmtree(out_dir, ignore_errors=True)
+            if stage_to is not None:
+                return self._write_staged(
+                    stage_to, stream_id, batch_id, version, n_buckets,
+                    delta_dirs, stats, t0,
                 )
-                if batch_id <= hw:  # the racer applied this very batch
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    return MergeResult(
-                        skipped=True, reason="fenced",
-                        version=version, snapshot_id=base["snapshot_id"],
-                    )
-                if base["n_buckets"] != n_buckets:
-                    # the racer was a RESCALE: this delta's bucket= dirs
-                    # were computed under the old modulus — registering
-                    # them (or writing n_buckets back) would corrupt the
-                    # new layout. The caller redoes the merge; the fence
-                    # makes the redo exactly-once.
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise CommitConflict(
-                        "bucket layout changed during merge "
-                        f"({n_buckets} -> {base['n_buckets']}); redo the "
-                        "merge under the new layout"
-                    )
-        return MergeResult(
-            skipped=False,
-            version=m2["version"],
-            snapshot_id=m2["snapshot_id"],
-            rows_upserted=int(stats_row["live"]),
-            rows_deleted=int(stats_row["dead"]),
-            buckets_touched=len(touched),
-            wall_ms=(time.time() - t0) * 1000,
-        )
+            return self._append_branch_commit(
+                to_branch, stream_id, batch_id, delta_dirs, stats, t0
+            )
+        try:
+            res = self._publish_delta(
+                stream_id, batch_id, delta_dirs, stats, n_buckets, t0,
+                dead_letters=(
+                    (out_dir, dead_sink) if dead_sink is not None else None
+                ),
+            )
+        except CommitConflict:
+            # a rescale raced the write, or a torn orphan blocks the
+            # CAS: the caller redoes the merge (the fence keeps the redo
+            # exactly-once), so drop the unreferenced commit dir
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        if not delta_dirs:  # fence-only commit or fenced: nothing to keep
+            shutil.rmtree(out_dir, ignore_errors=True)
+        return res
 
     # ----------------------------------------------------------------- tags
     # Iceberg tag refs: a named, immutable pointer to a snapshot that
@@ -3603,9 +3523,7 @@ class MiniLakeTable:
         base_version: int,
         n_buckets: int,
         delta_dirs: dict[str, str],
-        live: int,
-        dead: int,
-        max_lsn: int,
+        stats: dict,
         t0: float,
     ) -> MergeResult:
         path = self._staged_path(wap_id)
@@ -3617,7 +3535,7 @@ class MiniLakeTable:
             "base_version_at_stage": base_version,
             "n_buckets": n_buckets,
             "delta_dirs": delta_dirs,
-            "stats": {"live": live, "dead": dead, "max_lsn": max_lsn},
+            "stats": stats,
             "staged_at": time.time(),
         }
         try:
@@ -3636,8 +3554,8 @@ class MiniLakeTable:
             skipped=False,
             version=base_version,
             snapshot_id=self.manifest(base_version)["snapshot_id"],
-            rows_upserted=live,
-            rows_deleted=dead,
+            rows_upserted=stats["live"],
+            rows_deleted=stats["dead"],
             buckets_touched=len(delta_dirs),
             wall_ms=(time.time() - t0) * 1000,
             staged=True,
@@ -3672,17 +3590,25 @@ class MiniLakeTable:
         stats: dict,
         expect_n_buckets: int,
         t0: float,
+        dead_letters: tuple[str, str] | None = None,
     ) -> MergeResult:
-        """The shared metadata-only publish core behind
+        """The one MOR commit routine, behind :meth:`merge`,
         :meth:`publish_staged` and the branch
         :meth:`fast_forward`/:meth:`cherry_pick_branch`: CAS-append
-        already-written MOR delta dirs and advance the stream's fence.
-        Re-checks the fence against the publish-time base — a batch
+        already-written delta dirs and advance the stream's fence.
+        Re-checks the fence against the commit-time base — a batch
         another writer applied meanwhile returns a fenced no-op WITH its
         delta dirs removed. Conflicts with concurrent commits retry on
         the fresh base (delta dirs are base-independent); a bucket-count
         mismatch raises :class:`CommitConflict` (deltas are bucketed
-        under the layout they were written against)."""
+        under the layout they were written against). An empty delta is
+        a fence-only commit, which no layout change can invalidate.
+
+        ``dead_letters`` — ``(commit_dir, sink)`` of a fused merge write:
+        its dead-letter pseudo-bucket is relocated to the sink once the
+        fence and layout checks pass, before the manifest registers
+        buckets (a fenced batch relocates nothing; the winning writer
+        delivered its own dead letters)."""
         base = self.manifest()
         while True:
             version = base["version"]
@@ -3694,63 +3620,33 @@ class MiniLakeTable:
                     skipped=True, reason="fenced",
                     version=version, snapshot_id=base["snapshot_id"],
                 )
-            if base["n_buckets"] != expect_n_buckets:
+            if delta_dirs and base["n_buckets"] != expect_n_buckets:
                 raise CommitConflict(
                     "bucket layout changed since the delta was written "
                     f"({expect_n_buckets} -> {base['n_buckets']})"
                 )
+            if dead_letters is not None:
+                self._relocate_dead_letters(*dead_letters)
+                dead_letters = None  # once, whatever the CAS retries
             if not delta_dirs:  # empty batch: fence advance only
                 return self._commit_fence_only(
                     base, version, stream_id, batch_id, t0
                 )
             new_buckets = dict(base["buckets"])
             new_dirs: list[str] = []
-            for b, d in sorted(delta_dirs.items()):
+            for b, d in sorted(delta_dirs.items(), key=lambda kv: int(kv[0])):
                 new_dirs.append(d)
                 new_buckets[b] = new_buckets.get(b, []) + [d]
-            m2 = {
-                "version": version + 1,
-                "snapshot_id": str(uuid.uuid4()),
-                "parent_snapshot_id": base["snapshot_id"],
-                "schema": base["schema"],
-                "key_cols": base["key_cols"],
-                "n_buckets": base["n_buckets"],
-                "write_mode": base.get("write_mode", "cow"),
-                "merge_engine": base.get("merge_engine", "lww"),
-                **(
-                    {"agg_spec": base["agg_spec"]}
-                    if "agg_spec" in base
-                    else {}
-                ),
-                "buckets": new_buckets,
-                "file_stats": self._stats_for_manifest(
-                    base, new_dirs, new_buckets, base["key_cols"][0]
-                ),
-                "properties": {
-                    **base["properties"],
-                    FENCES_PROP: {
-                        **base["properties"].get(FENCES_PROP, {}),
-                        stream_id: batch_id,
-                    },
-                    MAX_LSN_PROP: max(
-                        base["properties"].get(MAX_LSN_PROP, -1),
-                        int(stats["max_lsn"]),
-                    ),
-                },
-                "stats": {
-                    "live_rows": int(stats["live"]),
-                    "tombstones": int(stats["dead"]),
-                    "stats_scope": "mor_delta",
-                },
-                "committed_at": time.time(),
-            }
+            m2 = self._data_snapshot(
+                base, new_buckets, new_dirs, stream_id, batch_id, stats,
+                "mor_delta",
+            )
             try:
                 self._write_manifest(m2)
                 break
             except CommitConflict:
-                # same soundness as merge's MOR retry: the delta is
-                # base-independent, so rebase on the racer's snapshot
-                # (torn-orphan livelock surfaces as the re-raise)
+                # the delta is base-independent, so rebase on the racer's
+                # snapshot (torn-orphan livelock surfaces as the re-raise)
                 base = self._reload_after_conflict(version)
         return MergeResult(
             skipped=False,
@@ -3873,9 +3769,7 @@ class MiniLakeTable:
         stream_id: str,
         batch_id: int,
         delta_dirs: dict[str, str],
-        live: int,
-        dead: int,
-        max_lsn: int,
+        stats: dict,
         t0: float,
     ) -> MergeResult:
         """O_EXCL-claim the branch's next commit slot. On a slot race the
@@ -3909,7 +3803,7 @@ class MiniLakeTable:
                 "stream_id": stream_id,
                 "batch_id": batch_id,
                 "delta_dirs": delta_dirs,
-                "stats": {"live": live, "dead": dead, "max_lsn": max_lsn},
+                "stats": stats,
                 "committed_at": time.time(),
             }
             try:
@@ -3924,8 +3818,8 @@ class MiniLakeTable:
                 skipped=False,
                 version=bdesc["base_version"],
                 snapshot_id=base_snap,
-                rows_upserted=live,
-                rows_deleted=dead,
+                rows_upserted=stats["live"],
+                rows_deleted=stats["dead"],
                 buckets_touched=len(delta_dirs),
                 wall_ms=(time.time() - t0) * 1000,
                 branch=name,

@@ -44,6 +44,10 @@ from .operators.lww import detect_hot_keys, lww_reduce, lww_reduce_salted
 from .operators.validate import split_valid, valid_predicate
 from .schema import KEY_COLS, write_default
 
+# a batch is salted when one key holds at least this share of the skew
+# probe's sample
+SKEW_THRESHOLD = 0.05
+
 
 @dataclass
 class ApplyConfig:
@@ -52,9 +56,7 @@ class ApplyConfig:
     op_col: str = "op"
     clean_cols: tuple[str, ...] = ("text",)
     use_pandas_udf: bool = True  # Arrow path (input_hint mandate); False = pure JVM exprs
-    salt_on_skew: bool = True
     force_salted: bool = False
-    skew_threshold: float = 0.05
     # the skew probe is a sampling job of its own — only probe batches
     # big enough that a hot key could actually hurt (file-size estimate)
     skew_probe_min_bytes: int = 64 * 1024 * 1024
@@ -256,9 +258,7 @@ def apply_batch(
     # re-run scan + pandas-UDF cleaning for exactly the large batches
     # where that hurts most.
     probe_worthy = (
-        cfg.salt_on_skew
-        and est_bytes is not None
-        and est_bytes >= cfg.skew_probe_min_bytes
+        est_bytes is not None and est_bytes >= cfg.skew_probe_min_bytes
     )
     if cfg.force_salted:
         salted = True
@@ -274,10 +274,10 @@ def apply_batch(
         if ent is not None and batch_id - ent[0] < cfg.skew_probe_every:
             salted = ent[1]
         else:
-            salted = detect_hot_keys(batch_df, cfg.key_cols, cfg.skew_threshold)
+            salted = detect_hot_keys(batch_df, cfg.key_cols, SKEW_THRESHOLD)
             skew_memo[stream_id] = (batch_id, salted)
     else:
-        salted = detect_hot_keys(batch_df, cfg.key_cols, cfg.skew_threshold)
+        salted = detect_hot_keys(batch_df, cfg.key_cols, SKEW_THRESHOLD)
     # A backend whose MERGE cannot tolerate multiple source rows per key
     # (real Iceberg MERGE INTO raises on multi-match) declares
     # requires_unique_source=True and gets the LWW pre-reduce regardless

@@ -3,15 +3,20 @@ letters inside the merge's ONE delta-write Spark job (pseudo-bucket -1
 relocated to the dead-letter sink) instead of re-scanning the source in
 a second job — the r3 verdict's hot-path item. Covers: job count, DLQ
 content fidelity (raw payload, original op), table-state purity, the
-all-dead fence-only path, and fenced replays not duplicating the DLQ."""
+all-dead fence-only path, fenced replays not duplicating the DLQ, and a
+batch fenced at its commit turn relocating no dead letters."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from test_spread import _count_nodes, _write_plan
 
-from etl_pipeline_spark.lake.minilake import MiniLakeTable
+from etl_pipeline_spark.lake.minilake import FENCES_PROP, MiniLakeTable
+from etl_pipeline_spark.operators.validate import valid_predicate
 from etl_pipeline_spark.pipeline import ApplyConfig, apply_batch
 from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA
 
@@ -159,44 +164,74 @@ def test_fenced_replay_does_not_duplicate_dlq(spark, tmp_path):
     assert dlq.count() == 3
 
 
-def test_fused_merge_plan_single_scan_single_exchange(spark, tmp_path):
+@pytest.mark.parametrize("row_lineage", [False, True], ids=["lww", "lineage"])
+def test_fused_merge_plan_single_scan_single_exchange(
+    spark, tmp_path, row_lineage
+):
     """The fused frame must plan as ONE scan + ONE exchange — the same
     shape as a clean batch. (A filter/union split design degrades to two
     scans: Catalyst pushes the validity filters below the repartition,
     so the two exchanges stop being reusable — measured, not
-    hypothetical.) Mirrors the construction in MiniLakeTable.merge."""
-    batch = _batch(spark, tmp_path, MIXED_ROWS)
-    from etl_pipeline_spark.operators.lww import lww_reduce
-    from etl_pipeline_spark.operators.validate import valid_predicate
-
-    vpred = F.coalesce(valid_predicate(KEYS, "op"), F.lit(False))
-    tagged = (
-        batch.withColumn("_valid", vpred)
-        .withColumn(
-            "_src_op", F.when(~vpred, F.col("op").cast("string"))
-        )
-        .withColumn(
-            "_bucket",
-            F.when(
-                F.col("_valid"),
-                F.pmod(F.xxhash64(F.col("conv_id")), F.lit(8)).cast("int"),
-            ).otherwise(F.lit(-1)),
-        )
+    hypothetical.) Checked on the write plan merge actually ran for a
+    dirty batch into a 32-bucket table, with and without row lineage
+    (whose fold adds a Window inside the same Exchange)."""
+    table = MiniLakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, key_cols=KEYS,
+        n_buckets=32, write_mode="mor", row_lineage=row_lineage,
     )
-    clustered = tagged.repartition(8, F.col("_bucket"))
-    clustered = clustered.withColumn(
-        "_dlq_key",
-        F.when(F.col("_valid"), F.lit(None).cast("long")).otherwise(
-            F.col("lsn")
-        ),
-    ).drop("_valid")
-    merged = lww_reduce(
-        clustered, keys=["_bucket"] + KEYS + ["_dlq_key"], order_col="lsn"
-    ).drop("_dlq_key")
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan") == 1, plan
-    assert plan.count("Exchange") == 1, plan
+    assert table.supports_dead_letter_fusion
+    apply_batch(table, _batch(spark, tmp_path, MIXED_ROWS), 0)
+    assert os.path.isdir(
+        os.path.join(table.root, "_deadletter", "batch-000000")
+    )
+    plan = _write_plan(spark, "commit")
+    assert plan.count("Scan parquet") == 1, plan
+    assert _count_nodes(plan, "Exchange") == 1, plan
+    assert _count_nodes(plan, "Sort") == 1, plan
     assert "Union" not in plan, plan
+    assert _count_nodes(plan, "Window") == (1 if row_lineage else 0), plan
+
+
+@pytest.mark.parametrize("all_dead", [False, True], ids=["mixed", "all-dead"])
+def test_merge_fenced_after_pre_commit_relocates_nothing(
+    spark, tmp_path, all_dead
+):
+    """A fused merge whose batch another handle applies while it waits
+    on ``pre_commit`` must come back fenced, leave no commit dir of its
+    own behind and deliver no dead letters (the winner delivered them)."""
+    table = _mor_table(spark, tmp_path)
+    rows = (
+        [r for r in MIXED_ROWS if r[0] is None or r[1] is None]
+        if all_dead
+        else MIXED_ROWS
+    )
+    batch = _batch(spark, tmp_path, rows).withColumn(
+        "_v", F.coalesce(valid_predicate(KEYS, "op"), F.lit(False))
+    )
+    sink = str(tmp_path / "dlq")
+    racer_sink = str(tmp_path / "dlq-racer")
+
+    def racer_applies_first():
+        won = MiniLakeTable(spark, table.root).merge(
+            batch, batch_id=0, stream_id="s",
+            valid_col="_v", dead_sink=racer_sink,
+        )
+        assert not won.skipped
+
+    res = table.merge(
+        batch, batch_id=0, stream_id="s", valid_col="_v", dead_sink=sink,
+        pre_commit=racer_applies_first,
+    )
+    assert res.skipped and res.reason == "fenced"
+    assert not os.path.exists(sink) or not os.listdir(sink)
+    assert len(os.listdir(racer_sink)) > 0
+    m = table.manifest()
+    registered = {
+        os.path.dirname(d) for ds in m["buckets"].values() for d in ds
+    }
+    on_disk = set(glob.glob(os.path.join(table.data_dir, "commit-*")))
+    assert on_disk == registered, (on_disk, registered)
+    assert m["properties"][FENCES_PROP] == {"s": 0}
 
 
 def test_dlq_raw_forensics_and_null_lsn_distinctness(spark, tmp_path):

@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 
 from etl_pipeline_spark.lake.iceberg_backend import IcebergTable
-from etl_pipeline_spark.lake.minilake import HIGHWATER_PROP
+from etl_pipeline_spark.lake.minilake import FENCES_PROP
 
 
 class _Rows:
@@ -80,12 +80,12 @@ def _table(session) -> IcebergTable:
 def test_fence_round_trips_through_write_api():
     sess = FakeIcebergSession()
     t = _table(sess)
-    assert t.snapshot_props()[HIGHWATER_PROP] == {}
+    assert t.snapshot_props()[FENCES_PROP] == {}
 
     res = t.merge(FakeSource(), batch_id=3, stream_id="s1")
     assert not res.skipped
     # the fence written by merge() is visible to the next fence read
-    assert t.snapshot_props()[HIGHWATER_PROP] == {"s1": 3}
+    assert t.snapshot_props()[FENCES_PROP] == {"s1": 3}
 
     # replayed batch is fenced out BEFORE any MERGE statement runs
     n_merges = sum("MERGE INTO" in s for s in sess.statements)
@@ -96,7 +96,7 @@ def test_fence_round_trips_through_write_api():
     # other stream lineages are fenced independently
     res3 = t.merge(FakeSource(), batch_id=0, stream_id="s2")
     assert not res3.skipped
-    assert t.snapshot_props()[HIGHWATER_PROP] == {"s1": 3, "s2": 0}
+    assert t.snapshot_props()[FENCES_PROP] == {"s1": 3, "s2": 0}
 
 
 def test_apply_batch_forces_pre_reduce_for_unique_source_sinks(spark, tmp_path):

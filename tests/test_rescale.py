@@ -5,6 +5,9 @@ change instead of corrupting the new layout."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import types as T
 
@@ -120,10 +123,15 @@ def test_racing_merge_detects_rescale(spark, tmp_path, monkeypatch):
             other.rescale_buckets(7)  # commits between base-read and CAS
         return orig(self, manifest)
 
+    commits_before = set(glob.glob(os.path.join(t.data_dir, "commit-*")))
     monkeypatch.setattr(MiniLakeTable, "_write_manifest", sabotage)
     with pytest.raises(CommitConflict, match="bucket layout changed"):
         t.merge(_batch(spark, [("a", 0, "x2", 10, "U")]), batch_id=1)
     monkeypatch.undo()
+    # the raise drops the losing merge's commit dir (nothing leaks)
+    assert set(glob.glob(os.path.join(t.data_dir, "commit-*"))) == (
+        commits_before
+    )
     # the caller's redo under the new layout converges exactly-once
     res = t.merge(_batch(spark, [("a", 0, "x2", 10, "U")]), batch_id=1)
     assert not res.skipped
@@ -133,11 +141,35 @@ def test_racing_merge_detects_rescale(spark, tmp_path, monkeypatch):
     assert t.manifest()["n_buckets"] == 7
 
 
+def test_pipelined_merge_detects_rescale_at_its_turn(spark, tmp_path):
+    """A pipelined merge whose write job ran under the old layout must
+    raise CommitConflict when a rescale commits while it waits on
+    ``pre_commit`` (its deltas are bucketed under the old modulus), and
+    drop its commit dir."""
+    root = str(tmp_path / "t")
+    t = MiniLakeTable.create(
+        spark, root, SCHEMA, key_cols=KEYS, n_buckets=4, write_mode="mor",
+    )
+    t.merge(_batch(spark, [("a", 0, "x", 1, "I"), ("b", 0, "y", 2, "I")]),
+            batch_id=0)
+    commits_before = set(glob.glob(os.path.join(t.data_dir, "commit-*")))
+    with pytest.raises(CommitConflict, match="bucket layout changed"):
+        t.merge(
+            _batch(spark, [("a", 0, "x2", 10, "U")]), batch_id=1,
+            pre_commit=lambda: MiniLakeTable(spark, root).rescale_buckets(7),
+        )
+    assert set(glob.glob(os.path.join(t.data_dir, "commit-*"))) == (
+        commits_before
+    )
+    assert t.manifest()["n_buckets"] == 7
+    assert {r["conv_id"]: r["text"] for r in t.read().collect()} == {
+        "a": "x", "b": "y",
+    }
+
+
 def test_racing_rescale_loses_cleanly(spark, tmp_path, monkeypatch):
     """A rescale whose CAS loses to a concurrent merge abandons its
     rewrite (no partial layout ever becomes visible) and re-raises."""
-    import os
-
     root = str(tmp_path / "t")
     t = MiniLakeTable.create(
         spark, root, SCHEMA, key_cols=KEYS, n_buckets=4, write_mode="mor",
