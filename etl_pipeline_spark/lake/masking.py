@@ -71,17 +71,31 @@ def set_masking_policy(
             f"redact_pii masks string columns; {column!r} is "
             f"{f.dataType.simpleString()}"
         )
-    current = table.manifest().get("properties", {}).get(MASKING_PROP, {})
-    updated = {**current, physical_name(f): {"kind": kind}}
-    return table._commit_properties({MASKING_PROP: updated})
+    pcol = physical_name(f)
+    return _commit_policies(
+        table, lambda pols: {**pols, pcol: {"kind": kind}}
+    )
 
 
 def drop_masking_policy(table: MiniLakeTable, column: str) -> int:
     """Remove the policy on ``column`` (no-op commit if none bound)."""
-    f = _field(table, column)
-    current = table.manifest().get("properties", {}).get(MASKING_PROP, {})
-    updated = {k: v for k, v in current.items() if k != physical_name(f)}
-    return table._commit_properties({MASKING_PROP: updated})
+    pcol = physical_name(_field(table, column))
+    return _commit_policies(
+        table, lambda pols: {k: v for k, v in pols.items() if k != pcol}
+    )
+
+
+def _commit_policies(table: MiniLakeTable, update) -> int:
+    """Commit ``update(policies)`` as the policy map. The map is read
+    from the base each CAS attempt lands on, so a retry keeps the policy
+    a racing writer bound meanwhile."""
+    return table._commit_snapshot(
+        table.manifest(),
+        lambda base: {"properties": {
+            **base["properties"],
+            MASKING_PROP: update(base["properties"].get(MASKING_PROP, {})),
+        }},
+    )["version"]
 
 
 def masking_policies(

@@ -11,6 +11,16 @@ implemented on Parquet data files + atomic JSON snapshot manifests:
   complete snapshot. This is the reference's single-transaction
   truncate+insert discipline (/root/reference/utils/load.py:213-271)
   generalized to snapshot isolation.
+- **One commit routine** — every writer but ``create`` and
+  ``shallow_clone`` commits through ``_commit_snapshot``: the writer
+  supplies the fields it changes, the routine carries the table state,
+  stamps version/parent/snapshot id/time and CASes. On a conflict it
+  reloads the base (adopting a complete version file whose writer died
+  before the pointer swap; a torn one raises after a bounded wait) and
+  asks the writer again. Two policies: MOR, WAP and branch publishes,
+  fence-only commits, MOR compaction and property writes rebase onto
+  the racer's snapshot; COW merges, COW compaction, DDL, rescale,
+  ``expire_rows`` and rollback CAS once and raise.
 - **Exactly-once fencing** — the snapshot carries per-stream-lineage
   batch-id high-water marks (``engine.fences``); ``merge(batch_id=...,
   stream_id=...)`` no-ops when that lineage already applied the batch.
@@ -50,6 +60,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -105,6 +116,14 @@ SKETCH_STATS_PROP = "engine.table-sketches"  # incremental HLL NDV blobs
 # fold-skip read, per-file scan planning, expire_rows safety, the audit's
 # duplicate-key check — keys off this ONE tuple.
 RESOLVED_DIR_PREFIXES = ("compact-", "rescale-", "expire-")
+
+# Table-state fields a successor snapshot inherits from its base. The
+# per-commit fields (``stats``, ``rolled_back_from``) are not carried:
+# they describe the commit that wrote them.
+_CARRIED = (
+    "schema", "key_cols", "n_buckets", "write_mode", "merge_engine",
+    "agg_spec", "buckets", "file_stats", "properties",
+)
 
 
 def snapshot_is_resolved(m: dict, dirs: list[str] | None = None) -> bool:
@@ -519,31 +538,10 @@ class MiniLakeTable:
         os.rename(tmp, os.path.join(self.meta_dir, "CURRENT"))
         return True
 
-    def _commit_properties(self, updates: dict) -> int:
-        """Metadata-only snapshot commit merging ``updates`` into the
-        current properties — the shared CAS-retry loop behind ANALYZE,
-        row-lineage enablement and any future property write. Retries
-        on conflict by re-landing the same updates on the racer's base
-        (property writes are attributed, not base-dependent). Returns
-        the committed version."""
-        while True:
-            base = self.manifest()
-            m2 = dict(base)
-            m2["version"] = base["version"] + 1
-            m2["parent_snapshot_id"] = base["snapshot_id"]
-            m2["snapshot_id"] = str(uuid.uuid4())
-            m2["properties"] = {**base["properties"], **updates}
-            m2["committed_at"] = time.time()
-            try:
-                self._write_manifest(m2)
-                return m2["version"]
-            except CommitConflict:
-                continue  # racer committed; re-land on its base
-
     def _reload_after_conflict(self, prev_version: int) -> dict:
-        """Fresh CAS base after a :class:`CommitConflict` — the shared
-        re-entry point of every retry loop, and the reason none of them
-        can spin forever: a retry is only handed a base that actually
+        """Fresh CAS base after a :class:`CommitConflict` — the re-entry
+        point of :meth:`_commit_snapshot`, and the reason it can never
+        spin forever: a retry is only handed a base that actually
         PROGRESSED past the one it lost on. No visible progress means the
         blocking ``v{prev+1}`` file is an orphan; a valid one (crash
         after the manifest fsync, before the pointer rename) is adopted
@@ -566,6 +564,83 @@ class MiniLakeTable:
                     "the torn file to unblock commits."
                 )
             time.sleep(0.05)
+
+    def _commit_snapshot(
+        self,
+        base: dict,
+        build: Callable[[dict], dict | None],
+        out_dir: str | None = None,
+    ) -> dict | None:
+        """Commit the successor of ``base`` — the one commit routine of
+        every writer except :meth:`create` and :meth:`shallow_clone`.
+
+        ``build(base)`` returns the fields this commit changes, or None
+        when the base makes the commit unnecessary (a racer applied the
+        same batch); then nothing is committed and None is returned.
+        The successor carries only the table state (:data:`_CARRIED`),
+        so per-commit fields — ``stats``, ``rolled_back_from`` — appear
+        only when ``build`` sets them. Version, parent, snapshot id and
+        commit time are stamped here, and the manifest CASes through
+        :meth:`_write_manifest`.
+
+        On :class:`CommitConflict` the fresh base always comes from
+        :meth:`_reload_after_conflict` (a valid stale version file is
+        adopted, a torn one raises after a bounded wait) and ``build``
+        runs again on it. The conflict policy is the builder's: one that
+        may rebase returns fields for the new base; one that must not
+        (:meth:`_pinned`) raises :class:`CommitConflict`. Whenever the
+        routine raises :class:`CommitConflict`, ``out_dir`` — the
+        commit's unregistered data dir — is removed. Returns the
+        committed manifest."""
+        try:
+            while True:
+                fields = build(base)
+                if fields is None:
+                    return None
+                m2 = {
+                    "version": base["version"] + 1,
+                    "snapshot_id": str(uuid.uuid4()),
+                    "parent_snapshot_id": base["snapshot_id"],
+                    **{k: base[k] for k in _CARRIED if k in base},
+                    **fields,
+                    "committed_at": time.time(),
+                }
+                try:
+                    self._write_manifest(m2)
+                    return m2
+                except CommitConflict:
+                    base = self._reload_after_conflict(base["version"])
+        except CommitConflict:
+            if out_dir is not None:
+                shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+
+    @staticmethod
+    def _pinned(version: int, fields: dict) -> Callable[[dict], dict]:
+        """Builder of a one-CAS commit: ``fields`` were derived from
+        snapshot ``version`` and are only valid on top of it, so a
+        conflict raises instead of rebasing — the caller re-runs the
+        operation on the fresh snapshot."""
+
+        def build(base: dict) -> dict:
+            if base["version"] != version:
+                raise CommitConflict(
+                    f"v{version + 1} was committed by another writer "
+                    f"(table now at v{base['version']}); re-run the "
+                    "operation on the fresh snapshot"
+                )
+            return fields
+
+        return build
+
+    def _commit_properties(self, updates: dict) -> int:
+        """Metadata-only commit merging ``updates`` into the properties;
+        retried on the racer's base (the updates do not depend on it).
+        Returns the committed version."""
+        return self._commit_snapshot(
+            self.manifest(),
+            lambda b: {"properties": {**b["properties"], **updates}},
+        )["version"]
 
     # ------------------------------------------------------------- schema
 
@@ -718,14 +793,9 @@ class MiniLakeTable:
             taken.add(physical_name(f))
             resolved.append(f)
         new_schema = T.StructType(list(schema.fields) + resolved)
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["schema"] = schema_to_manifest(new_schema)
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"], {"schema": schema_to_manifest(new_schema)}
+        ))["version"]
 
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only column rename (Iceberg ALTER TABLE ... RENAME
@@ -752,13 +822,11 @@ class MiniLakeTable:
                 fields.append(T.StructField(new, f.dataType, f.nullable, md))
             else:
                 fields.append(f)
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["schema"] = schema_to_manifest(T.StructType(fields))
+        changed: dict = {"schema": schema_to_manifest(T.StructType(fields))}
         if old in m["key_cols"]:
-            m2["key_cols"] = [new if k == old else k for k in m["key_cols"]]
+            changed["key_cols"] = [
+                new if k == old else k for k in m["key_cols"]
+            ]
         # a rename must not orphan a CHECK constraint that names the old
         # column — re-resolve all of them against the renamed schema and
         # fail the DDL (drop/re-add the constraint first) instead of
@@ -772,15 +840,15 @@ class MiniLakeTable:
         # recorded bounds stay valid across the rename)
         scols = m["properties"].get(STATS_COLS_PROP)
         if scols and old in scols:
-            m2["properties"] = {
+            changed["properties"] = {
                 **m["properties"],
                 STATS_COLS_PROP: sorted(
                     new if c == old else c for c in scols
                 ),
             }
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(
+            m, self._pinned(m["version"], changed)
+        )["version"]
 
     def drop_column(self, name: str) -> int:
         """Metadata-only column drop (Iceberg ALTER TABLE ... DROP
@@ -797,27 +865,17 @@ class MiniLakeTable:
             raise ValueError(f"no column {name!r}")
         if name in m["key_cols"]:
             raise ValueError(f"cannot drop key column {name!r}")
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["schema"] = schema_to_manifest(
-            T.StructType([f for f in schema.fields if f.name != name])
-        )
+        kept = T.StructType([f for f in schema.fields if f.name != name])
         # same guard as rename: a drop must not orphan a constraint
         for cname, c in m["properties"].get(CONSTRAINTS_PROP, {}).items():
-            self._resolve_constraint(
-                c["expr"],
-                T.StructType([f for f in schema.fields if f.name != name]),
-                cname,
-            )
+            self._resolve_constraint(c["expr"], kept, cname)
         # retired set lives in properties: every manifest rebuild site
         # spread-carries properties, so a later merge/publish/compact
         # can never silently un-retire a physical name. A dropped stats
         # column leaves the declaration too (its recorded bounds go
         # stale-but-unused; re-adding the name maps to a FRESH physical
         # column, so old bounds can never prune the new one).
-        m2["properties"] = {
+        properties = {
             **m["properties"],
             RETIRED_PROP: sorted(
                 set(m["properties"].get(RETIRED_PROP, []))
@@ -829,9 +887,10 @@ class MiniLakeTable:
                 if c != name
             ),
         }
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"],
+            {"schema": schema_to_manifest(kept), "properties": properties},
+        ))["version"]
 
     # Safe type promotions (Iceberg/Delta type-widening set, limited to
     # what Spark's Parquet readers natively upcast — SPARK-40876): a
@@ -881,14 +940,9 @@ class MiniLakeTable:
             else f
             for f in schema.fields
         ]
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["schema"] = schema_to_manifest(T.StructType(fields))
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"], {"schema": schema_to_manifest(T.StructType(fields))}
+        ))["version"]
 
     # -------------------------------------------------------- constraints
 
@@ -943,14 +997,10 @@ class MiniLakeTable:
             expr, schema_from_manifest(m["schema"]), name
         )
         cons[name] = {"expr": expr, "mode": mode}
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["properties"] = {**m["properties"], CONSTRAINTS_PROP: cons}
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"],
+            {"properties": {**m["properties"], CONSTRAINTS_PROP: cons}},
+        ))["version"]
 
     def drop_constraint(self, name: str) -> int:
         m = self.manifest()
@@ -958,14 +1008,10 @@ class MiniLakeTable:
         if name not in cons:
             raise ValueError(f"no constraint {name!r}")
         del cons[name]
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["properties"] = {**m["properties"], CONSTRAINTS_PROP: cons}
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"],
+            {"properties": {**m["properties"], CONSTRAINTS_PROP: cons}},
+        ))["version"]
 
     def constraints(self) -> dict:
         return dict(
@@ -1005,16 +1051,12 @@ class MiniLakeTable:
                     f"timestamp or date column, got "
                     f"{by_name[c].dataType.simpleString()}"
                 )
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["parent_snapshot_id"] = m["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["properties"] = {
-            **m["properties"], STATS_COLS_PROP: sorted(set(cols))
-        }
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(m, self._pinned(
+            m["version"],
+            {"properties": {
+                **m["properties"], STATS_COLS_PROP: sorted(set(cols))
+            }},
+        ))["version"]
 
     def stats_columns(self) -> list[str]:
         return list(
@@ -2635,23 +2677,17 @@ class MiniLakeTable:
         dropped dirs are trimmed so the manifest never grows beyond the
         live file set."""
         stats = dict(base.get("file_stats", {}))
-        # footers store the PHYSICAL column name (rescale passes a
-        # synthetic schema-less base — its caller resolves names itself,
-        # and its output carries no secondary-column bounds until the
-        # next compaction re-collects them)
-        pkey0 = key0
-        stats_pcols: tuple[str, ...] = ()
-        if "schema" in base:
-            to_phys = {
-                f.name: physical_name(f)
-                for f in schema_from_manifest(base["schema"]).fields
-            }
-            pkey0 = to_phys.get(key0, key0)
-            stats_pcols = tuple(
-                to_phys[c]
-                for c in base.get("properties", {}).get(STATS_COLS_PROP, [])
-                if c in to_phys
-            )
+        # footers store the PHYSICAL column name
+        to_phys = {
+            f.name: physical_name(f)
+            for f in schema_from_manifest(base["schema"]).fields
+        }
+        pkey0 = to_phys.get(key0, key0)
+        stats_pcols = tuple(
+            to_phys[c]
+            for c in base.get("properties", {}).get(STATS_COLS_PROP, [])
+            if c in to_phys
+        )
         for d in new_dirs:
             s = self._collect_dir_stats(d, pkey0, stats_pcols)
             if s is not None:
@@ -2684,6 +2720,29 @@ class MiniLakeTable:
         live = {d for ds in new_buckets.values() for d in ds}
         return {d: s for d, s in stats.items() if d in live}
 
+    def _rewrite_writer(self, physical: DataFrame, base: dict):
+        """Writer for a maintenance rewrite (compaction, rescale, row
+        expiry) of a physical-schema frame: bucket-partitioned, with a
+        parquet bloom filter on the key — equality pushdown skips row
+        groups the min/max bounds can't exclude — and on every declared
+        stats column, so an equality predicate on a secondary column
+        skips row groups INSIDE the files the manifest bounds kept
+        (manifest prunes files, bloom prunes row groups)."""
+        to_phys = {
+            f.name: physical_name(f)
+            for f in schema_from_manifest(base["schema"]).fields
+        }
+        pkey0 = to_phys[base["key_cols"][0]]
+        writer = physical.write.partitionBy(BUCKET_COL).option(
+            f"parquet.bloom.filter.enabled#{pkey0}", "true"
+        )
+        for c in base["properties"].get(STATS_COLS_PROP, []):
+            if c in to_phys and to_phys[c] != pkey0:
+                writer = writer.option(
+                    f"parquet.bloom.filter.enabled#{to_phys[c]}", "true"
+                )
+        return writer
+
     # -------------------------------------------------------------- merge
 
     @staticmethod
@@ -2704,52 +2763,6 @@ class MiniLakeTable:
             )
         shutil.rmtree(neg, ignore_errors=True)
 
-    def _commit_fence_only(
-        self, base: dict, version: int, stream_id: str, batch_id: int, t0: float
-    ) -> MergeResult:
-        """Commit a data-free snapshot that only advances the stream's
-        fence — the exactly-once path for batches that change no rows
-        (fully dead-lettered / empty input). Shared by the COW pre-write
-        empty-batch path and :meth:`_publish_delta`'s empty delta."""
-        while True:
-            m2 = dict(base)
-            m2["version"] = version + 1
-            m2["parent_snapshot_id"] = base["snapshot_id"]
-            m2["snapshot_id"] = str(uuid.uuid4())
-            m2["properties"] = {
-                **base["properties"],
-                FENCES_PROP: {
-                    **base["properties"].get(FENCES_PROP, {}),
-                    stream_id: batch_id,
-                },
-            }
-            m2["committed_at"] = time.time()
-            try:
-                self._write_manifest(m2)
-            except CommitConflict:
-                # a fence advance carries no data: always safe to retry
-                # on top of whatever the racing writer committed
-                base = self._reload_after_conflict(version)
-                version = base["version"]
-                hw = base["properties"].get(FENCES_PROP, {}).get(
-                    stream_id, -1
-                )
-                if batch_id <= hw:  # the racer applied this very batch
-                    return MergeResult(
-                        skipped=True, reason="fenced",
-                        version=version, snapshot_id=base["snapshot_id"],
-                    )
-                continue
-            return MergeResult(
-                skipped=False,
-                version=m2["version"],
-                snapshot_id=m2["snapshot_id"],
-                rows_upserted=0,
-                rows_deleted=0,
-                buckets_touched=0,
-                wall_ms=(time.time() - t0) * 1000,
-            )
-
     def _data_snapshot(
         self,
         base: dict,
@@ -2760,20 +2773,11 @@ class MiniLakeTable:
         stats: dict,
         stats_scope: str,
     ) -> dict:
-        """The next manifest after a data commit on ``base``: the new
-        bucket map and file stats, the stream's fence advanced to
-        ``batch_id``, max-lsn raised, and the write-observed row counts
-        (the exact recount happens in compact(); merges stay cheap)."""
+        """The fields a data commit on ``base`` changes: the new bucket
+        map and file stats, the stream's fence advanced to ``batch_id``,
+        max-lsn raised, and the row counts this commit's write observed
+        (no commit recounts the table; merges stay cheap)."""
         return {
-            "version": base["version"] + 1,
-            "snapshot_id": str(uuid.uuid4()),
-            "parent_snapshot_id": base["snapshot_id"],
-            "schema": base["schema"],
-            "key_cols": base["key_cols"],
-            "n_buckets": base["n_buckets"],
-            "write_mode": base.get("write_mode", "cow"),
-            "merge_engine": base.get("merge_engine", "lww"),
-            **({"agg_spec": base["agg_spec"]} if "agg_spec" in base else {}),
             "buckets": new_buckets,
             "file_stats": self._stats_for_manifest(
                 base, new_dirs, new_buckets, base["key_cols"][0]
@@ -2794,7 +2798,6 @@ class MiniLakeTable:
                 "tombstones": int(stats["dead"]),
                 "stats_scope": stats_scope,
             },
-            "committed_at": time.time(),
         }
 
     def merge(
@@ -2831,14 +2834,14 @@ class MiniLakeTable:
         stale updates lose; see module docstring).
 
         MOR batches commit through :meth:`_publish_delta`, the one
-        commit routine WAP publish and branch publish also use: it reads
+        MOR commit WAP publish and branch publish also use: it reads
         the base at commit time, re-checks the fence (a batch applied
         meanwhile returns ``skipped``/``fenced`` and its commit dir is
         removed), raises :class:`CommitConflict` if a rescale changed
         the bucket layout, and retries other CAS conflicts on the
         racer's base. A batch with no data rows (all dead-lettered)
-        commits fence-only. COW merges CAS once against the base their
-        write read and raise on conflict.
+        commits fence-only, in both write modes. COW merges CAS once
+        against the base their write read and raise on conflict.
 
         ``pre_commit`` (callable, optional — **MOR mode only**) enables
         pipelined ingest: the expensive write job runs immediately, then
@@ -3234,8 +3237,9 @@ class MiniLakeTable:
                 # data but MUST advance the fence — otherwise every
                 # resume re-processes it forever (exactly-once includes
                 # no-op batches). Commit a fence-only snapshot.
-                return self._commit_fence_only(
-                    base, version, stream_id, batch_id, t0
+                return self._publish_delta(
+                    stream_id, batch_id, {},
+                    {"live": 0, "dead": 0, "max_lsn": -1}, n_buckets, t0,
                 )
             current_dirs = [
                 d for b in touched for d in base["buckets"].get(str(b), [])
@@ -3348,7 +3352,10 @@ class MiniLakeTable:
         stats = {
             "live": int(stats_row["live"]),
             "dead": int(stats_row["dead"]),
-            "max_lsn": int(stats_row["max_lsn"] or -1),
+            "max_lsn": (
+                -1 if stats_row["max_lsn"] is None
+                else int(stats_row["max_lsn"])
+            ),
         }
 
         if write_mode == "cow":
@@ -3361,15 +3368,15 @@ class MiniLakeTable:
                 d = os.path.join(out_dir, f"{BUCKET_COL}={b}")
                 new_buckets[str(b)] = [d] if os.path.exists(d) else []
                 new_dirs += new_buckets[str(b)]
-            m2 = self._data_snapshot(
-                base, new_buckets, new_dirs, stream_id, batch_id, stats,
-                "touched_buckets_only" if len(touched) < n_buckets else "full",
+            m2 = self._commit_snapshot(
+                base,
+                self._pinned(version, self._data_snapshot(
+                    base, new_buckets, new_dirs, stream_id, batch_id, stats,
+                    "touched_buckets_only" if len(touched) < n_buckets
+                    else "full",
+                )),
+                out_dir=out_dir,
             )
-            try:
-                self._write_manifest(m2)
-            except CommitConflict:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                raise
             return MergeResult(
                 skipped=False,
                 version=m2["version"],
@@ -3402,22 +3409,10 @@ class MiniLakeTable:
             return self._append_branch_commit(
                 to_branch, stream_id, batch_id, delta_dirs, stats, t0
             )
-        try:
-            res = self._publish_delta(
-                stream_id, batch_id, delta_dirs, stats, n_buckets, t0,
-                dead_letters=(
-                    (out_dir, dead_sink) if dead_sink is not None else None
-                ),
-            )
-        except CommitConflict:
-            # a rescale raced the write, or a torn orphan blocks the
-            # CAS: the caller redoes the merge (the fence keeps the redo
-            # exactly-once), so drop the unreferenced commit dir
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-        if not delta_dirs:  # fence-only commit or fenced: nothing to keep
-            shutil.rmtree(out_dir, ignore_errors=True)
-        return res
+        return self._publish_delta(
+            stream_id, batch_id, delta_dirs, stats, n_buckets, t0,
+            out_dir=out_dir, dead_sink=dead_sink,
+        )
 
     # ----------------------------------------------------------------- tags
     # Iceberg tag refs: a named, immutable pointer to a snapshot that
@@ -3590,9 +3585,10 @@ class MiniLakeTable:
         stats: dict,
         expect_n_buckets: int,
         t0: float,
-        dead_letters: tuple[str, str] | None = None,
+        out_dir: str | None = None,
+        dead_sink: str | None = None,
     ) -> MergeResult:
-        """The one MOR commit routine, behind :meth:`merge`,
+        """The one MOR commit, behind :meth:`merge`,
         :meth:`publish_staged` and the branch
         :meth:`fast_forward`/:meth:`cherry_pick_branch`: CAS-append
         already-written delta dirs and advance the stream's fence.
@@ -3604,50 +3600,56 @@ class MiniLakeTable:
         under the layout they were written against). An empty delta is
         a fence-only commit, which no layout change can invalidate.
 
-        ``dead_letters`` — ``(commit_dir, sink)`` of a fused merge write:
-        its dead-letter pseudo-bucket is relocated to the sink once the
+        ``out_dir`` — a merge's commit dir: removed if the commit raises
+        (the caller redoes the merge; the fence keeps the redo
+        exactly-once) or registers no data. With ``dead_sink`` its
+        dead-letter pseudo-bucket is relocated to the sink once the
         fence and layout checks pass, before the manifest registers
         buckets (a fenced batch relocates nothing; the winning writer
         delivered its own dead letters)."""
-        base = self.manifest()
-        while True:
-            version = base["version"]
-            hw = base["properties"].get(FENCES_PROP, {}).get(stream_id, -1)
-            if batch_id <= hw:
-                for top in {os.path.dirname(d) for d in delta_dirs.values()}:
-                    shutil.rmtree(top, ignore_errors=True)
-                return MergeResult(
-                    skipped=True, reason="fenced",
-                    version=version, snapshot_id=base["snapshot_id"],
-                )
+        fenced_on: list[dict] = []
+
+        def build(base: dict) -> dict | None:
+            nonlocal dead_sink
+            fences = base["properties"].get(FENCES_PROP, {})
+            if batch_id <= fences.get(stream_id, -1):
+                fenced_on.append(base)
+                return None
             if delta_dirs and base["n_buckets"] != expect_n_buckets:
                 raise CommitConflict(
                     "bucket layout changed since the delta was written "
                     f"({expect_n_buckets} -> {base['n_buckets']})"
                 )
-            if dead_letters is not None:
-                self._relocate_dead_letters(*dead_letters)
-                dead_letters = None  # once, whatever the CAS retries
+            if dead_sink is not None:
+                self._relocate_dead_letters(out_dir, dead_sink)
+                dead_sink = None  # once, whatever the CAS retries
             if not delta_dirs:  # empty batch: fence advance only
-                return self._commit_fence_only(
-                    base, version, stream_id, batch_id, t0
-                )
+                return {"properties": {
+                    **base["properties"],
+                    FENCES_PROP: {**fences, stream_id: batch_id},
+                }}
             new_buckets = dict(base["buckets"])
             new_dirs: list[str] = []
             for b, d in sorted(delta_dirs.items(), key=lambda kv: int(kv[0])):
                 new_dirs.append(d)
                 new_buckets[b] = new_buckets.get(b, []) + [d]
-            m2 = self._data_snapshot(
+            return self._data_snapshot(
                 base, new_buckets, new_dirs, stream_id, batch_id, stats,
                 "mor_delta",
             )
-            try:
-                self._write_manifest(m2)
-                break
-            except CommitConflict:
-                # the delta is base-independent, so rebase on the racer's
-                # snapshot (torn-orphan livelock surfaces as the re-raise)
-                base = self._reload_after_conflict(version)
+
+        m2 = self._commit_snapshot(self.manifest(), build, out_dir=out_dir)
+        if m2 is None or not delta_dirs:
+            # fenced, or fence-only: no written dir is registered
+            tops = {os.path.dirname(d) for d in delta_dirs.values()}
+            for top in tops | ({out_dir} if out_dir else set()):
+                shutil.rmtree(top, ignore_errors=True)
+        if m2 is None:
+            return MergeResult(
+                skipped=True, reason="fenced",
+                version=fenced_on[-1]["version"],
+                snapshot_id=fenced_on[-1]["snapshot_id"],
+            )
         return MergeResult(
             skipped=False,
             version=m2["version"],
@@ -3912,18 +3914,17 @@ class MiniLakeTable:
                 f"rollback target v{version} is not older than v{current}"
             )
         old = self.manifest(version)
-        cur = self.manifest(current)
-        m2 = dict(old)
-        m2["version"] = current + 1
-        m2["parent_snapshot_id"] = cur["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["rolled_back_from"] = {
+        restored = {k: old[k] for k in _CARRIED if k in old}
+        # a target written before file stats existed must not inherit
+        # the current snapshot's (they describe other dirs)
+        restored.setdefault("file_stats", {})
+        restored["rolled_back_from"] = {
             "version": version,
             "snapshot_id": old["snapshot_id"],
         }
-        m2["committed_at"] = time.time()
-        self._write_manifest(m2)
-        return m2["version"]
+        return self._commit_snapshot(
+            self.manifest(current), self._pinned(current, restored)
+        )["version"]
 
     # ---------------------------------------------------------- retention
 
@@ -4304,22 +4305,12 @@ class MiniLakeTable:
                 BUCKET_COL,
                 self._bucket_expr(base["key_cols"][0], base["n_buckets"]),
             )
-            to_phys = {f.name: physical_name(f) for f in schema.fields}
-            pkey0 = to_phys[base["key_cols"][0]]
-            writer = (
-                self._to_physical(kept, schema)
-                # no repartition and no sort: each boundary file's rows
-                # flow through their own scan tasks, preserving the
-                # compaction's clustering inside the rewritten output
-                .write.partitionBy(BUCKET_COL)
-                .option(f"parquet.bloom.filter.enabled#{pkey0}", "true")
-            )
-            for c in base.get("properties", {}).get(STATS_COLS_PROP, []):
-                if c in to_phys and to_phys[c] != pkey0:
-                    writer = writer.option(
-                        f"parquet.bloom.filter.enabled#{to_phys[c]}", "true"
-                    )
-            writer.mode("overwrite").parquet(out_dir)
+            # no repartition and no sort: each boundary file's rows flow
+            # through their own scan tasks, preserving the compaction's
+            # clustering inside the rewritten output
+            self._rewrite_writer(
+                self._to_physical(kept, schema), base
+            ).mode("overwrite").parquet(out_dir)
             n_rewritten = sum(len(v) for v in boundary.values())
         for path, b in linked:
             bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
@@ -4340,20 +4331,16 @@ class MiniLakeTable:
                 new_dirs.append(bucket_dir)
             else:
                 new_buckets.pop(str(b), None)  # bucket fully expired
-        m2 = dict(base)
-        m2["version"] = version + 1
-        m2["parent_snapshot_id"] = base["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["buckets"] = new_buckets
-        m2["file_stats"] = self._stats_for_manifest(
-            base, new_dirs, new_buckets, base["key_cols"][0]
+        m2 = self._commit_snapshot(
+            base,
+            self._pinned(version, {
+                "buckets": new_buckets,
+                "file_stats": self._stats_for_manifest(
+                    base, new_dirs, new_buckets, base["key_cols"][0]
+                ),
+            }),
+            out_dir=out_dir,
         )
-        m2["committed_at"] = time.time()
-        try:
-            self._write_manifest(m2)
-        except CommitConflict:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
         return {
             "version": m2["version"],
             "files_dropped": len(dropped),
@@ -4843,53 +4830,68 @@ class MiniLakeTable:
                     else [F.col(c) for c in split_cols]
                 ),
             )
-        writer = (
-            self._to_physical(df, schema)
-            # Clustered row groups: compaction is the long-lived layout,
-            # so pay one local sort here — by key (default: point
-            # lookups prune row groups on tight key min/max) or by the
-            # caller's cluster_cols / z-value (range scans prune files
-            # on tight secondary bounds). Deltas stay unsorted — they
-            # are short-lived by design. The bucket leads the sort: a
-            # partition holds several buckets, and the writer needs
-            # them contiguous — on the plain path the fold's own sort
-            # already provides (bucket, key), so this Sort plans away.
-            .sortWithinPartitions(
+        # Clustered row groups: compaction is the long-lived layout, so
+        # pay one local sort here — by key (default: point lookups prune
+        # row groups on tight key min/max) or by the caller's
+        # cluster_cols / z-value (range scans prune files on tight
+        # secondary bounds). Deltas stay unsorted — they are short-lived
+        # by design. The bucket leads the sort: a partition holds
+        # several buckets, and the writer needs them contiguous — on the
+        # plain path the fold's own sort already provides (bucket, key),
+        # so this Sort plans away.
+        self._rewrite_writer(
+            self._to_physical(df, schema).sortWithinPartitions(
                 BUCKET_COL,
                 *([z_physical] if z_physical is not None else sort_pcols),
-            )
-            .write.partitionBy(BUCKET_COL)
-            # parquet bloom filter on the key: equality pushdown skips
-            # row groups the min/max bounds can't exclude
-            .option(f"parquet.bloom.filter.enabled#{pkey0}", "true")
-        )
-        # declared stats columns get blooms too: an equality predicate
-        # on a secondary column then skips row groups INSIDE the files
-        # the manifest bounds kept (manifest prunes files, bloom prunes
-        # row groups — the two tiers compose)
-        for c in base.get("properties", {}).get(STATS_COLS_PROP, []):
-            if c in to_phys and to_phys[c] != pkey0:
-                writer = writer.option(
-                    f"parquet.bloom.filter.enabled#{to_phys[c]}", "true"
-                )
-        writer.mode("overwrite").parquet(out_dir)
+            ),
+            base,
+        ).mode("overwrite").parquet(out_dir)
         # the exact dir-set each folded file REPLACES — a conflicted
         # commit rebuilds on a fresh base by swapping precisely these
         # out and keeping any deltas a racing merge appended since
         folded_set = {
             b: set(base["buckets"].get(str(b), [])) for b in target
         }
-        while True:
-            new_buckets = dict(base["buckets"])
+        skipped_dirs: list[str] = []
+
+        def build(fresh: dict) -> dict:
+            if fresh["version"] != version:
+                if fresh.get("write_mode", "cow") != "mor":
+                    # COW: a racing merge REPLACED the bucket dirs this
+                    # compaction folded — keeping both the stale fold and
+                    # the racer's replacement would duplicate rows, and
+                    # COW reads have no LWW resolve to hide it. Mirror
+                    # merge()'s COW policy: drop the fold and surface the
+                    # conflict; the caller re-runs compaction on the
+                    # fresh base.
+                    raise CommitConflict(
+                        f"v{version + 1} was committed by another writer "
+                        "during copy-on-write compaction; re-run "
+                        "compaction on the fresh snapshot"
+                    )
+                if fresh["n_buckets"] != n_buckets:
+                    # the racer was a RESCALE: this fold's bucket= dirs
+                    # were computed under the old modulus and cannot be
+                    # registered in the new layout
+                    raise CommitConflict(
+                        "bucket layout changed during compaction "
+                        f"({n_buckets} -> {fresh['n_buckets']}); re-run "
+                        "compaction under the new layout"
+                    )
+            # MOR maintenance racing ingest: racers only APPEND delta
+            # dirs and reads LWW-resolve, so rebuilding the manifest on
+            # the racer's base (folded files + surviving deltas) stays
+            # correct
+            new_buckets = dict(fresh["buckets"])
             new_dirs: list[str] = []
-            skipped_dirs: list[str] = []
+            skipped_dirs.clear()
             for b in target:
                 bucket_dir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
                 base_dirs = new_buckets.get(str(b), [])
                 if folded_set[b] - set(base_dirs):
                     # A fold may only REPLACE its exact inputs. Some of
-                    # this bucket's inputs are gone from the (possibly
-                    # conflict-reloaded) base — a RACING COMPACTION
+                    # this bucket's inputs are gone from the
+                    # conflict-reloaded base — a RACING COMPACTION
                     # already folded them away. Registering our output
                     # next to the racer's would store every key twice
                     # (and the maintained-snapshot fold-skip read would
@@ -4911,51 +4913,17 @@ class MiniLakeTable:
                     new_buckets[str(b)] = folded + survivors
                 else:
                     new_buckets.pop(str(b), None)  # bucket emptied out
-            m2 = dict(base)
-            m2["version"] = version + 1
-            m2["parent_snapshot_id"] = base["snapshot_id"]
-            m2["snapshot_id"] = str(uuid.uuid4())
-            m2["buckets"] = new_buckets
-            m2["file_stats"] = self._stats_for_manifest(
-                base, new_dirs, new_buckets, key0
-            )
-            m2["committed_at"] = time.time()
-            try:
-                self._write_manifest(m2)
-                for d in skipped_dirs:  # redundant folds, never registered
-                    shutil.rmtree(d, ignore_errors=True)
-                return m2["version"]
-            except CommitConflict:
-                if base.get("write_mode", "cow") != "mor":
-                    # COW: a racing merge REPLACED the bucket dirs this
-                    # compaction folded — keeping both the stale fold and
-                    # the racer's replacement would duplicate rows, and
-                    # COW reads have no LWW resolve to hide it. Mirror
-                    # merge()'s COW policy: drop the fold and surface the
-                    # conflict; the caller re-runs compaction on the
-                    # fresh base.
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                # MOR maintenance racing ingest: racers only APPEND delta
-                # dirs and reads LWW-resolve, so rebuilding the manifest
-                # on the racer's base (folded files + surviving deltas)
-                # stays correct
-                try:
-                    base = self._reload_after_conflict(version)
-                except CommitConflict:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                if base["n_buckets"] != n_buckets:
-                    # the racer was a RESCALE: this fold's bucket= dirs
-                    # were computed under the old modulus and cannot be
-                    # registered in the new layout
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise CommitConflict(
-                        "bucket layout changed during compaction "
-                        f"({n_buckets} -> {base['n_buckets']}); re-run "
-                        "compaction under the new layout"
-                    )
-                version = base["version"]
+            return {
+                "buckets": new_buckets,
+                "file_stats": self._stats_for_manifest(
+                    fresh, new_dirs, new_buckets, key0
+                ),
+            }
+
+        m2 = self._commit_snapshot(base, build, out_dir=out_dir)
+        for d in skipped_dirs:  # redundant folds, never registered
+            shutil.rmtree(d, ignore_errors=True)
+        return m2["version"]
 
     # ------------------------------------------------------------ rescale
 
@@ -5032,14 +5000,11 @@ class MiniLakeTable:
             self.data_dir, f"rescale-{version + 1:06d}-{uuid.uuid4().hex[:12]}"
         )
         pkey0 = {f.name: physical_name(f) for f in schema.fields}[key0]
-        (
+        self._rewrite_writer(
             self._to_physical(df.drop(SPREAD_COL), schema)
-            .sortWithinPartitions(BUCKET_COL, pkey0)
-            .write.partitionBy(BUCKET_COL)
-            .option(f"parquet.bloom.filter.enabled#{pkey0}", "true")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
+            .sortWithinPartitions(BUCKET_COL, pkey0),
+            base,
+        ).mode("overwrite").parquet(out_dir)
         new_buckets: dict[str, list[str]] = {}
         new_dirs: list[str] = []
         for b in range(n_buckets_new):
@@ -5047,21 +5012,16 @@ class MiniLakeTable:
             if os.path.exists(bucket_dir):
                 new_buckets[str(b)] = [bucket_dir]
                 new_dirs.append(bucket_dir)
-        m2 = dict(base)
-        m2["version"] = version + 1
-        m2["parent_snapshot_id"] = base["snapshot_id"]
-        m2["snapshot_id"] = str(uuid.uuid4())
-        m2["n_buckets"] = n_buckets_new
-        m2["buckets"] = new_buckets
-        # every dir is fresh — stats computed here, nothing memoized from
-        # the old layout carries over
-        m2["file_stats"] = self._stats_for_manifest(
-            {"file_stats": {}}, new_dirs, new_buckets, pkey0
-        )
-        m2["committed_at"] = time.time()
-        try:
-            self._write_manifest(m2)
-        except CommitConflict:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-        return m2["version"]
+        # every dir is fresh — stats computed here (key and declared
+        # stats columns), nothing memoized from the old layout carries
+        return self._commit_snapshot(
+            base,
+            self._pinned(version, {
+                "n_buckets": n_buckets_new,
+                "buckets": new_buckets,
+                "file_stats": self._stats_for_manifest(
+                    {**base, "file_stats": {}}, new_dirs, new_buckets, key0
+                ),
+            }),
+            out_dir=out_dir,
+        )["version"]

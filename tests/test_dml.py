@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.lake.minilake import (
+    MAX_LSN_PROP,
     ConstraintViolation,
     MiniLakeTable,
 )
@@ -126,3 +127,24 @@ def test_delete_where_no_matches_is_clean_noop(spark, tmp_path):
     t.delete_where("conv_id = 'b'")
     assert t.read().count() == 2
     assert t.current_version() > v
+
+
+def test_lsn_zero_batch_sets_the_dml_high_water(spark, tmp_path):
+    """A batch whose highest LSN is 0 records max-lsn 0, not "no LSN":
+    the next DML then writes at LSN 1 and beats the row it targets
+    instead of tying with it."""
+    t = MiniLakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA_V0, key_cols=KEYS,
+        n_buckets=2, write_mode="mor",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("a", 0, "user", "hello", None, 0, "I")],
+            "conv_id string, turn_idx int, role string, text string, "
+            "ts timestamp, lsn long, op string",
+        ),
+        batch_id=0,
+    )
+    assert t.snapshot_props()[MAX_LSN_PROP] == 0
+    t.delete_where("conv_id = 'a'")
+    assert t.read().count() == 0

@@ -238,3 +238,27 @@ def test_masked_read_stays_jvm_side(spark, tmp_path):
     plan = read_masked(t)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_racing_policy_binds_both_survive(spark, tmp_path):
+    """A policy commit that loses its CAS to another handle's policy
+    commit rebuilds the policy map from the racer's snapshot: both
+    columns end up masked."""
+    t = _table(spark, tmp_path)
+    racer = MiniLakeTable(spark, t.root)
+    orig = t._write_manifest
+    fired = []
+
+    def hooked(manifest):
+        if not fired:
+            fired.append(True)
+            set_masking_policy(racer, "role", "null")
+        return orig(manifest)
+
+    t._write_manifest = hooked
+    try:
+        set_masking_policy(t, "text", "redact_pii")
+    finally:
+        t._write_manifest = orig
+    assert fired
+    assert masking_policies(t) == {"role": "null", "text": "redact_pii"}

@@ -349,6 +349,16 @@ def test_metadata_tables_describe_the_data(spark, tmp_path):
                              "touched_buckets_only")
         for s in snaps
     )
+    # write stats describe their own commit: the compaction snapshot
+    # reports none rather than repeating the last merge's
+    assert snaps[2]["stats_scope"] == "mor_delta"
+    assert snaps[3]["stats_scope"] is None
+    assert snaps[3]["live_rows"] is None
+    # rollback provenance belongs to the rollback snapshot only
+    v_rb = t.rollback(2)
+    assert t.manifest(v_rb)["rolled_back_from"]["version"] == 2
+    t.add_constraint("turn_ok", "turn_idx >= 0")
+    assert "rolled_back_from" not in t.manifest()
 
 
 def test_compact_splits_oversized_buckets_into_key_disjoint_files(

@@ -198,3 +198,32 @@ def test_racing_rescale_loses_cleanly(spark, tmp_path, monkeypatch):
     t.rescale_buckets(8)
     assert t.manifest()["n_buckets"] == 8
     assert {r["conv_id"] for r in t.read().collect()} == {"a", "b"}
+
+
+def test_rescale_records_declared_stats_column_bounds(spark, tmp_path):
+    """A rescale's output carries per-file bounds for the declared stats
+    columns, like compaction's, so range scans keep pruning per file."""
+    t = MiniLakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, key_cols=KEYS,
+        n_buckets=2, write_mode="mor",
+    )
+    t.merge(
+        _batch(spark, [(f"c{i}", i, f"v{i}", i + 1, "I") for i in range(40)]),
+        batch_id=0,
+    )
+    t.set_stats_columns(["turn_idx"])
+    t.compact()
+    t.rescale_buckets(4)
+    m = t.manifest()
+    files = [
+        fb
+        for ds in m["buckets"].values()
+        for d in ds
+        for fb in m["file_stats"][d]["files"].values()
+    ]
+    assert files and all("turn_idx" in fb for fb in files)
+    plan = t.plan_range_scan("turn_idx", 0, 0)
+    assert plan["mode"] == "file"
+    assert plan["files_planned"] < plan["files_total"], plan
+    got = sorted(r["conv_id"] for r in t.read_range("turn_idx", 0, 0).collect())
+    assert got == ["c0"]
