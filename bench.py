@@ -253,7 +253,7 @@ def main() -> None:
         )
         t0 = time.time()
         # The MOR merge bucket-clusters + LWW-pre-reduces in ONE shuffle
-        # (minilake.merge), so pipeline-level pre_reduce would only add a
+        # (minilake.merge), so a pipeline-level pre-reduce would only add a
         # redundant keys-shuffle here. pipeline_depth=2 overlaps batch
         # k+1's job with batch k's (commits stay batch-ordered): the
         # overlap fills each batch's serial driver time AND its stage

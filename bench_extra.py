@@ -4,13 +4,12 @@ NOT the frozen driver bench (bench.py). This harness isolates phases so
 optimizations can be attributed:
 
 - ``replay``: the bench replay with per-batch walls (from the lineage
-  log) and the end-of-replay compact timed separately. ``--jvm-clean``
-  switches the cleaning stage to the pure-JVM column expressions.
+  log) and the end-of-replay compact timed separately.
 - ``queries``: each headline query timed with the noop sink, with
   ``.explain("formatted")`` captured to ``plans/r06/<name>_<tag>.txt``.
 
 Usage:
-    python bench_extra.py replay [--jvm-clean] [--reps N]
+    python bench_extra.py replay [--reps N]
     python bench_extra.py queries [--tag before] [--only name1,name2]
 """
 
@@ -41,7 +40,7 @@ def _spark():
     )
 
 
-def run_replay(jvm_clean: bool = False, reps: int = 2) -> None:
+def run_replay(reps: int = 2) -> None:
     from etl_pipeline_spark.lake.lineage import LineageLog
     from etl_pipeline_spark.lake.minilake import MiniLakeTable
     from etl_pipeline_spark.pipeline import ApplyConfig
@@ -54,7 +53,7 @@ def run_replay(jvm_clean: bool = False, reps: int = 2) -> None:
     spark = _spark()
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
     work = tempfile.mkdtemp(prefix="bench_extra_")
-    out: dict = {"jvm_clean": jvm_clean, "runs": []}
+    out: dict = {"runs": []}
     try:
         for rep in range(reps):
             table = MiniLakeTable.create(
@@ -67,9 +66,7 @@ def run_replay(jvm_clean: bool = False, reps: int = 2) -> None:
             replay_files(
                 spark, clog, table,
                 files_per_batch=bench.FILES_PER_BATCH,
-                cfg=ApplyConfig(
-                    lineage_level="batch", use_pandas_udf=not jvm_clean
-                ),
+                cfg=ApplyConfig(lineage_level="batch"),
                 pipeline_depth=bench.PIPELINE_DEPTH,
             )
             replay_s = time.time() - t0
@@ -132,7 +129,6 @@ if __name__ == "__main__":
     args = sys.argv[1:]
     if args and args[0] == "replay":
         run_replay(
-            jvm_clean="--jvm-clean" in args,
             reps=int(args[args.index("--reps") + 1]) if "--reps" in args else 2,
         )
     elif args and args[0] == "queries":

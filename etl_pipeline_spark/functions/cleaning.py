@@ -7,11 +7,12 @@ Three synchronized layers of the same semantics:
    corpus (reference: /root/reference/utils/transform.py:23-78, tests at
    /root/reference/tests/test_transform.py:174-271).
 2. **Column-expression** variants — built-in ``pyspark.sql.functions`` only,
-   JVM-side, whole-stage-codegen'd. The hot path at 100 TB.
+   JVM-side, whole-stage-codegen'd. Used by queries that clean stored
+   columns at read time (``queries.q_cdc_lww_cleaned``).
 3. **Vectorized pandas UDF** variants — the Arrow path mandated by
    BASELINE.json:input_hint ("vectorized pandas/Arrow UDFs, no per-row
-   Python"). Used where exact Python-semantics parity matters more than raw
-   JVM speed; still ~10-100x faster than row-at-a-time UDFs.
+   Python"). The ingest path (``pipeline.apply_batch``) always cleans with
+   ``clean_text_pudf``; still ~10-100x faster than row-at-a-time UDFs.
 
 Reference semantics preserved exactly (they drive per-turn text equality):
 
@@ -22,8 +23,9 @@ Reference semantics preserved exactly (they drive per-turn text equality):
   group 1; fallback float(strip()) else None.
 - ``clean_colors`` (transform.py:60-78): first integer via ``(\\d+)`` → int
   else None.
-- text/role cleaning for the transcript payload: strip whitespace;
-  sentinel junk ("[unavailable]", "not rated", "n/a", "") → null.
+- text/role cleaning for the transcript payload: strip whitespace (what
+  ``str.strip()`` strips, in every layer); sentinel junk ("[unavailable]",
+  "not rated", "n/a", "") → null.
 """
 
 from __future__ import annotations
@@ -44,6 +46,15 @@ _COLORS_RE = re.compile(r"(\d+)")
 _PRICE_STRIP_RE = re.compile(r"[$,]")
 
 TEXT_SENTINELS = frozenset({"[unavailable]", "not rated", "n/a", ""})
+
+# every character ``str.strip()`` removes (``str.isspace``) — Spark's
+# ``trim`` strips only spaces, so the Column layer trims this set
+# explicitly to match the specification
+STRIP_CHARS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002"
+    "\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f"
+    "\u205f\u3000"
+)
 
 
 def clean_price_py(value) -> float | None:
@@ -126,7 +137,7 @@ def clean_colors_col(c: Column) -> Column:
 
 
 def clean_text_col(c: Column) -> Column:
-    stripped = F.trim(c)
+    stripped = F.btrim(c, F.lit(STRIP_CHARS))
     sentinels = F.array(*[F.lit(s) for s in sorted(TEXT_SENTINELS)])
     return F.when(
         F.array_contains(sentinels, F.lower(stripped)), F.lit(None).cast("string")

@@ -23,7 +23,7 @@ parity with MiniLakeTable:
 - evolution: additive ``ALTER TABLE ... ADD COLUMN``.
 - the MERGE requires a key-unique source: the class declares
   ``requires_unique_source = True`` and ``pipeline.apply_batch`` forces
-  the LWW pre-reduce automatically — no ApplyConfig flag to forget.
+  the LWW pre-reduce from it — there is no config flag to forget.
 """
 
 from __future__ import annotations
@@ -54,9 +54,8 @@ class IcebergTable:
     """Thin MERGE INTO wrapper with the MiniLakeTable interface."""
 
     # Iceberg MERGE INTO throws on multiple source matches per target
-    # row; pipeline.apply_batch sees this flag and forces the LWW
-    # pre-reduce even when ApplyConfig.pre_reduce is left False (the
-    # correct setting for MiniLake, whose merge reduces internally).
+    # row; pipeline.apply_batch pre-reduces exactly when this flag is set
+    # (MiniLake's merge reduces internally and leaves it False).
     requires_unique_source = True
 
     spark: SparkSession

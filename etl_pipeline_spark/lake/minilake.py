@@ -57,6 +57,7 @@ import json
 import math
 import os
 import shutil
+import sys
 import time
 import uuid
 from dataclasses import dataclass
@@ -166,6 +167,17 @@ class ConstraintViolation(ValueError):
     """A merge batch contained rows failing a table CHECK constraint
     whose mode is 'fail' (or 'dead_letter' without a dead-letter sink
     to route to)."""
+
+
+def _caller_stacklevel() -> int:
+    """``warnings.warn`` stacklevel, counted from the function that calls
+    this helper, of the first frame outside this module — so a warning
+    names the user's ``merge``/``compact`` line however deep the engine's
+    call chain is (Python 3.11 has no ``skip_file_prefixes``)."""
+    frame, level = sys._getframe(1), 1
+    while frame is not None and frame.f_code.co_filename == __file__:
+        frame, level = frame.f_back, level + 1
+    return level
 
 
 def _dedup_exact(df: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -341,31 +353,57 @@ class MiniLakeTable:
     def merge_engine(self) -> str:
         """'lww' (whole-row last-writer-wins, default), 'partial'
         (column-coalescing — operators/partial_update.py) or 'agg'
-        (per-column sum/min/max/last states — operators/agg_engine.py).
-        The pipeline reads this to skip its whole-row pre-reduce, which
-        would collapse a batch's partial updates into one row image and
-        drop an agg table's per-event contributions."""
+        (per-column sum/min/max/last states — operators/agg_engine.py)."""
         return self.manifest().get("merge_engine", "lww")
 
     @property
     def row_lineage(self) -> bool:
         """Whether this table carries per-row lineage summaries
-        (``_birth_lsn``/``_tomb_lsn``). pipeline.apply_batch reads this
-        to skip its whole-row pre-reduce: lineage is per-EVENT semantics
-        — a pipeline pre-collapse would erase within-batch births before
-        the merge's lineage-aware fold ever sees them."""
+        (``_birth_lsn``/``_tomb_lsn``)."""
         return bool(
             self.manifest().get("properties", {}).get(ROW_LINEAGE_PROP)
+        )
+
+    @property
+    def needs_every_event(self) -> bool:
+        """Whether merge() must see every event of a batch, so nothing
+        upstream may pre-collapse it (pipeline.apply_batch reads this to
+        skip its salted reduce and its skew probe):
+
+        - partial/agg engines: a whole-row pre-collapse would fold a
+          batch's partial updates into ONE row image (dropping columns
+          the last event didn't carry) and destroy an agg table's
+          per-event contributions — merge's own fold IS the reduce;
+        - ``dead_letter`` CHECK constraints: filter-then-LWW is per-EVENT
+          — a pre-collapse would let a newer VIOLATING event erase an
+          older valid one before the constraint check sees it;
+        - row lineage: the lineage-aware fold records within-batch
+          births, and a salted two-phase split can straddle a tombstone,
+          breaking the summary's associativity.
+
+        merge()'s internal clustered fold still collapses hot keys after
+        its one bucket Exchange; these tables give up the salted path's
+        balance, not correctness."""
+        m = self.manifest()
+        props = m.get("properties", {})
+        return (
+            m.get("merge_engine", "lww") != "lww"
+            or bool(props.get(ROW_LINEAGE_PROP))
+            or any(
+                c.get("mode") == "dead_letter"
+                for c in props.get(CONSTRAINTS_PROP, {}).values()
+            )
         )
 
     @property
     def supports_dead_letter_fusion(self) -> bool:
         """MOR tables can write dead-letter rows inside the merge's one
         delta-write job (merge(valid_col=..., dead_sink=...)) instead of
-        a second O(batch) source re-scan (pipeline.apply_batch reads
-        this flag). Partial- and agg-engine tables use the
-        separate-write DLQ path — their per-column folds would mangle a
-        dead row's payload and destroy its forensics."""
+        a second O(batch) source re-scan; pipeline.apply_batch fuses
+        whenever this holds and it neither salts nor pre-reduces the
+        batch. Partial- and agg-engine tables use the separate-write DLQ
+        path — their per-column folds would mangle a dead row's payload
+        and destroy its forensics."""
         m = self.manifest()
         return (
             m.get("write_mode", "cow") == "mor"
@@ -2715,7 +2753,7 @@ class MiniLakeTable:
                         f"manifest pruning and metadata expiry will scan "
                         f"everything (INT96 timestamps? set spark.sql."
                         f"parquet.outputTimestampType=TIMESTAMP_MICROS)",
-                        stacklevel=3,
+                        stacklevel=_caller_stacklevel(),
                     )
         live = {d for ds in new_buckets.values() for d in ds}
         return {d: s for d, s in stats.items() if d in live}
@@ -2936,20 +2974,12 @@ class MiniLakeTable:
                     "dead-letter fusion requires the lww merge engine"
                 )
         version = base["version"]
-        highwater = base["properties"].get(FENCES_PROP, {}).get(stream_id, -1)
         if to_branch is not None:
-            # branch-local fencing: commits already on the branch raise
-            # the high-water past the base snapshot's
-            highwater = max(
-                highwater,
-                max(
-                    (
-                        c["batch_id"]
-                        for c in self._branch_commits(to_branch)
-                        if c["stream_id"] == stream_id
-                    ),
-                    default=-1,
-                ),
+            # branch-local fencing: base fences + every branch commit
+            highwater = self.branch_fences(to_branch).get(stream_id, -1)
+        else:
+            highwater = base["properties"].get(FENCES_PROP, {}).get(
+                stream_id, -1
             )
         if batch_id <= highwater:
             return MergeResult(

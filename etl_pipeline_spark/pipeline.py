@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .functions.cleaning import clean_text_col, clean_text_pudf
+from .functions.cleaning import clean_text_pudf
 from .lake.lineage import LineageLog
 from .lake.minilake import (
     DELETED_COL,
@@ -47,6 +47,20 @@ from .schema import KEY_COLS, write_default
 # a batch is salted when one key holds at least this share of the skew
 # probe's sample
 SKEW_THRESHOLD = 0.05
+# The skew probe is a sampling job of its own: only batches whose input
+# files add up to this many bytes are probed (smaller batches cannot hurt
+# enough to pay for it; in-memory frames have no size estimate and are
+# never probed).
+SKEW_PROBE_MIN_BYTES = 64 * 1024 * 1024
+# Probe cadence per stream when the ingest loop threads a ``skew_memo``
+# through: the probe job re-runs every Nth applied batch and its verdict
+# is reused in between (skew is a property of the STREAM — a hot conv_id
+# stays hot across micro-batches — so re-scanning every batch bought
+# nothing; measured ~0.8 s/batch at local[16], ~15% of steady batch wall).
+# A direct apply_batch call with no memo probes every batch. Worst case on
+# skew ONSET mid-stream: up to N-1 batches merge unsalted — the merge's
+# LWW fold stays correct, only its balance suffers until the next probe.
+SKEW_PROBE_EVERY = 4
 
 
 @dataclass
@@ -55,34 +69,6 @@ class ApplyConfig:
     lsn_col: str = "lsn"
     op_col: str = "op"
     clean_cols: tuple[str, ...] = ("text",)
-    use_pandas_udf: bool = True  # Arrow path (input_hint mandate); False = pure JVM exprs
-    force_salted: bool = False
-    # the skew probe is a sampling job of its own — only probe batches
-    # big enough that a hot key could actually hurt (file-size estimate)
-    skew_probe_min_bytes: int = 64 * 1024 * 1024
-    # Probe cadence per stream when the driver threads a ``skew_memo``
-    # through: the probe job re-runs every Nth applied batch and its
-    # verdict is reused in between (skew is a property of the STREAM —
-    # a hot conv_id stays hot across micro-batches — so re-scanning
-    # every batch bought nothing; measured ~0.8 s/batch at local[16],
-    # ~15% of steady batch wall, 2,000 needless scan jobs per 10^10
-    # events). Cadence 1, or a direct apply_batch call with no memo,
-    # restores the probe-every-batch behavior. Worst case on skew
-    # ONSET mid-stream: up to N-1 batches merge unsalted — the merge's
-    # LWW fold (a partial + final SortAggregate, both after the one
-    # bucket Exchange) stays correct, only its balance suffers until the
-    # next probe.
-    skew_probe_every: int = 4
-    # The minilake MERGE resolves LWW itself: MOR mode bucket-clusters +
-    # LWW-reduces the batch inside its one delta-write shuffle (measured:
-    # replay+compact 29s → 18s at sf0.1 on an update-heavy stream), and
-    # COW reduces across {current ∪ batch}. A pipeline-level pre-reduce
-    # is therefore a redundant extra keys-shuffle on the minilake backend
-    # — enable it only for sinks that require ≤1 source row per key and
-    # don't reduce themselves (real Iceberg MERGE INTO). The salted
-    # reduce still pre-collapses hot keys when skew is detected,
-    # whatever this flag says.
-    pre_reduce: bool = False
     auto_compact_max_files: int = 12  # MOR delta-chain fold threshold; 0 = off
     dead_letter_dir: str | None = None  # default: <table_root>/_deadletter
     assert_unique_keys: bool = False
@@ -134,6 +120,33 @@ def _estimate_batch_bytes(df: DataFrame) -> int | None:
         )
     except Exception:
         return None
+
+
+def _probe_skew(
+    batch_df: DataFrame,
+    key_cols: list[str],
+    batch_id: int,
+    stream_id: str,
+    skew_memo: dict | None,
+) -> bool:
+    """Whether the batch has a hot key (→ salted reduce). Probes the RAW
+    batch frame, not the cleaned source: keys are untouched by cleaning,
+    and probing downstream would re-run scan + pandas-UDF cleaning for
+    exactly the large batches where that hurts most."""
+    est_bytes = _estimate_batch_bytes(batch_df)
+    if est_bytes is None or est_bytes < SKEW_PROBE_MIN_BYTES:
+        return False
+    if skew_memo is None or SKEW_PROBE_EVERY <= 1:
+        return detect_hot_keys(batch_df, key_cols, SKEW_THRESHOLD)
+    # Sticky probe: an ingest loop replaying one stream passes a per-run memo.
+    # Thread-safe enough for the pipelined replay: dict get/set are atomic
+    # and a stale verdict is only a balance heuristic.
+    ent = skew_memo.get(stream_id)
+    if ent is not None and batch_id - ent[0] < SKEW_PROBE_EVERY:
+        return ent[1]
+    salted = detect_hot_keys(batch_df, key_cols, SKEW_THRESHOLD)
+    skew_memo[stream_id] = (batch_id, salted)
+    return salted
 
 
 def apply_batch(
@@ -249,89 +262,29 @@ def apply_batch(
         obs = Observation()
         upstream = batch_df.observe(obs, *counter_aggs)
 
-    # Skew probe + reduce-requirement first: they decide whether the
-    # dead-letter split can be FUSED into the merge write (one Spark job,
-    # one source scan) or needs the legacy separate-job write.
-    est_bytes = _estimate_batch_bytes(batch_df)
-    # Probe the RAW batch frame, not the projected src: keys are
-    # untouched by the cleaning stage, and probing downstream would
-    # re-run scan + pandas-UDF cleaning for exactly the large batches
-    # where that hurts most.
-    probe_worthy = (
-        est_bytes is not None and est_bytes >= cfg.skew_probe_min_bytes
-    )
-    if cfg.force_salted:
-        salted = True
-    elif not probe_worthy:
-        salted = False
-    elif skew_memo is not None and cfg.skew_probe_every > 1:
-        # Sticky probe: a driver replaying one stream passes a per-run
-        # memo; the sampling job re-runs every `skew_probe_every`th
-        # applied batch, its verdict reused in between (see ApplyConfig).
-        # Thread-safe enough for the pipelined replay: dict get/set are
-        # atomic and a stale verdict is only a balance heuristic.
-        ent = skew_memo.get(stream_id)
-        if ent is not None and batch_id - ent[0] < cfg.skew_probe_every:
-            salted = ent[1]
-        else:
-            salted = detect_hot_keys(batch_df, cfg.key_cols, SKEW_THRESHOLD)
-            skew_memo[stream_id] = (batch_id, salted)
-    else:
-        salted = detect_hot_keys(batch_df, cfg.key_cols, SKEW_THRESHOLD)
-    # A backend whose MERGE cannot tolerate multiple source rows per key
-    # (real Iceberg MERGE INTO raises on multi-match) declares
-    # requires_unique_source=True and gets the LWW pre-reduce regardless
-    # of cfg.pre_reduce — misconfiguration must not be able to produce a
-    # runtime MERGE failure.
-    must_reduce = cfg.pre_reduce or getattr(
-        table, "requires_unique_source", False
-    )
-    if getattr(table, "merge_engine", "lww") != "lww":
-        # the pipeline's whole-row LWW reduce would collapse a batch's
-        # partial updates into ONE row image (dropping columns the last
-        # event didn't carry) and destroy an agg table's per-event sum
-        # contributions — the merge's internal fold IS the pre-reduce
-        # for these tables. It runs after the merge's one bucket
-        # Exchange, so a hot key's events still reach one task: these
-        # tables give up the salted path's balance, not correctness
-        if getattr(table, "requires_unique_source", False):
+    # Routing first: it decides whether the dead-letter split can be
+    # FUSED into the merge write (one Spark job, one source scan) or needs
+    # the legacy separate-job write. The minilake MERGE resolves LWW
+    # itself (MOR bucket-clusters + reduces inside its one delta-write
+    # shuffle, COW reduces across {current ∪ batch}), so a pipeline
+    # pre-reduce is only for a backend whose MERGE cannot take multiple
+    # source rows per key (real Iceberg MERGE INTO raises on multi-match):
+    # it declares requires_unique_source=True and always gets one.
+    must_reduce = getattr(table, "requires_unique_source", False)
+    # A table whose merge must see every event of the batch (see
+    # MiniLakeTable.needs_every_event) is never pre-collapsed, so it is
+    # never probed either.
+    if getattr(table, "needs_every_event", False):
+        if must_reduce:
             raise ValueError(
-                "partial/agg merge engines are unsupported on backends "
-                "that require a unique-key MERGE source"
+                "per-event merge semantics (partial/agg engine, dead_letter "
+                "constraint, row lineage) are unsupported on backends that "
+                "require a unique-key MERGE source"
             )
         salted = False
-        must_reduce = False
-    if (
-        hasattr(table, "constraints")
-        and not getattr(table, "requires_unique_source", False)
-        and any(
-            c.get("mode") == "dead_letter"
-            for c in table.constraints().values()
-        )
-    ):
-        # dead_letter CHECK constraints are per-EVENT semantics
-        # (filter-then-LWW): a pipeline pre-collapse would let a newer
-        # VIOLATING event erase an older valid one before the merge's
-        # constraint check ever sees it — the key would end up absent
-        # instead of keeping its last valid value — and the un-fused
-        # merge has no sink to divert to (violations would abort the
-        # batch). Force the fused path; the merge's internal clustered
-        # reduce still does map-side hot-key collapse, the same
-        # fallback the partial/agg engines ride (see above).
-        salted = False
-        must_reduce = False
-    if getattr(table, "row_lineage", False):
-        # Row-lineage tables are per-EVENT semantics too: the merge's
-        # lineage-aware fold must see every event of the batch to record
-        # within-batch births (a whole-row pre-collapse leaves only
-        # winners, silently reading birth == last for keys updated twice
-        # in one batch), and the salted two-phase split can straddle a
-        # tombstone arbitrarily, which breaks the summary's
-        # associativity. The merge's internal clustered fold still
-        # collapses hot keys — one window task per key worst-case is the
-        # documented lineage trade.
-        salted = False
-        must_reduce = False
+    else:
+        salted = _probe_skew(batch_df, cfg.key_cols, batch_id, stream_id,
+                             skew_memo)
     # Dead-letter fusion (MOR minilake, un-salted, un-pre-reduced — the
     # hot replay path): dead rows ride the merge's one delta-write job in
     # a relocatable pseudo-bucket instead of a second O(batch) source
@@ -353,7 +306,6 @@ def apply_batch(
     #    RAW payload for forensics). Legacy: filter twice; dead letters
     #    taken from the RAW frame so writing them later cannot re-fire
     #    the Observation node.
-    cleaner = clean_text_pudf if cfg.use_pandas_udf else clean_text_col
     if fuse_dead:
         valid = upstream
         dead = None
@@ -361,7 +313,7 @@ def apply_batch(
             if c_name in valid.columns:
                 valid = valid.withColumn(
                     c_name,
-                    F.when(is_valid, cleaner(F.col(c_name))).otherwise(
+                    F.when(is_valid, clean_text_pudf(F.col(c_name))).otherwise(
                         F.col(c_name)
                     ),
                 )
@@ -370,7 +322,7 @@ def apply_batch(
         _, dead = split_valid(batch_df, cfg.key_cols, cfg.op_col)
         for c_name in cfg.clean_cols:
             if c_name in valid.columns:
-                valid = valid.withColumn(c_name, cleaner(F.col(c_name)))
+                valid = valid.withColumn(c_name, clean_text_pudf(F.col(c_name)))
 
     # 4. In-flight additive schema evolution: payload columns the table
     #    doesn't know yet → ALTER TABLE ADD COLUMN before the merge.
@@ -399,7 +351,8 @@ def apply_batch(
             [T.StructField(f.name, f.dataType, True) for f in batch_payload_fields]
         )
 
-    # 5. Optional LWW pre-reduce (MERGE-source uniqueness; skew-aware).
+    # 5. LWW pre-reduce: salted on a hot-key batch, plain for a
+    #    unique-source backend, none otherwise (the merge folds).
     tschema = table.schema()
     types_by_name = {f.name: f.dataType for f in tschema.fields}
     payload_cols = [f.name for f in tschema.fields if f.name not in cfg.key_cols]

@@ -23,7 +23,7 @@ SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), True),
     ]
 )
-CFG = ApplyConfig(clean_cols=(), use_pandas_udf=False)
+CFG = ApplyConfig(clean_cols=())
 
 
 def _mk(spark, root, n=500):

@@ -57,6 +57,11 @@ TEXT_CASES = [
     ("", None),
     ("   ", None),
     (None, None),
+    # whitespace beyond the space character: every layer strips what
+    # str.strip() strips (Spark's bare trim() strips spaces only)
+    ("\thello\n", "hello"),
+    ("hello\r\n", "hello"),
+    ("\xa0n/a\xa0", None),
 ]
 
 
@@ -128,6 +133,12 @@ def test_clean_text_spark_layers(spark):
     for row, (raw, expected) in zip(rows, TEXT_CASES):
         assert row["expr"] == expected, f"expr mismatch on {raw!r}"
         assert row["udf"] == expected, f"udf mismatch on {raw!r}"
+
+
+def test_strip_chars_are_python_whitespace():
+    assert cleaning.STRIP_CHARS == "".join(
+        ch for ch in map(chr, range(0x110000)) if ch.isspace()
+    )
 
 
 def test_clean_texts_pandas_matches_py():

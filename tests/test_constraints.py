@@ -189,22 +189,27 @@ def test_requeue_roundtrips_constraint_dead_rows(spark, tmp_path):
     assert state == {("a", 50)}
 
 
-def test_salted_path_preserves_filter_then_lww(spark, tmp_path):
+def test_salted_path_preserves_filter_then_lww(spark, tmp_path, monkeypatch):
     """dead_letter constraints are per-EVENT semantics: a newer
     VIOLATING update must divert while the key keeps its older valid
     value. The pipeline's salted pre-collapse would have erased the
-    older event first — apply_batch must force the fused path even when
-    the config demands salting (the partial/agg-engine pattern)."""
+    older event first — apply_batch must take the fused path even when
+    the skew probe's gate is open and the probe would say "hot" (the
+    partial/agg-engine pattern)."""
+    import etl_pipeline_spark.pipeline as pl
+
+    monkeypatch.setattr(pl, "SKEW_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(pl, "detect_hot_keys", lambda df, keys, thr: True)
     t = _table(spark, tmp_path)
     t.add_constraint("role_ok", "role <> 'gremlin'", mode="dead_letter")
+    # file-backed: only a batch with input files has a size estimate,
+    # which the probe's size gate needs
+    _src(spark, [
+        ("a", 0, "user", "first", None, 1, "I"),
+        ("a", 0, "gremlin", "poison", None, 2, "U"),
+    ]).write.parquet(str(tmp_path / "batch"))
     apply_batch(
-        t,
-        _src(spark, [
-            ("a", 0, "user", "first", None, 1, "I"),
-            ("a", 0, "gremlin", "poison", None, 2, "U"),
-        ]),
-        batch_id=0,
-        cfg=ApplyConfig(force_salted=True),
+        t, spark.read.parquet(str(tmp_path / "batch")), batch_id=0,
     )
     state = {
         (r["conv_id"], r["turn_idx"]): (r["role"], r["text"])

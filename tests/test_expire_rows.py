@@ -30,7 +30,7 @@ SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), True),
     ]
 )
-CFG = ApplyConfig(clean_cols=(), use_pandas_udf=False)
+CFG = ApplyConfig(clean_cols=())
 ROWS_SQL = (
     "lsn long, op string, conv_id string, turn_idx int, text string, "
     "ts timestamp, score double"
@@ -401,3 +401,25 @@ def test_stats_loss_warns_loudly(spark, tmp_path):
         ]
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", old)
+
+
+def test_stats_loss_warning_points_at_the_callers_line(spark, tmp_path):
+    """The INT96 warning names the user's own merge/compact call, not a
+    frame inside the engine, however deep the engine's call chain is."""
+    t = _mk(spark, tmp_path / "w", [(1, "I", "c1", 1, "v1", _ts(1), 1.0)])
+    t.set_stats_columns(["ts"])
+    batch = spark.createDataFrame(
+        [(2, "U", "c1", 1, "v2", _ts(2), 2.0)], ROWS_SQL
+    )
+    old = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        with pytest.warns(UserWarning, match="stats column") as merged:
+            t.merge(batch, batch_id=1, stream_id="s")
+        with pytest.warns(UserWarning, match="stats column") as compacted:
+            t.compact(drop_tombstones=False)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", old)
+    for rec in (*merged, *compacted):
+        if "stats column" in str(rec.message):
+            assert rec.filename == __file__, (rec.filename, rec.lineno)

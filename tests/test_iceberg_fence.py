@@ -102,8 +102,8 @@ def test_fence_round_trips_through_write_api():
 def test_apply_batch_forces_pre_reduce_for_unique_source_sinks(spark, tmp_path):
     """A sink that declares ``requires_unique_source = True`` (real
     Iceberg MERGE INTO throws on multiple source matches) must receive a
-    key-unique MERGE source from apply_batch even when the caller leaves
-    ``ApplyConfig.pre_reduce`` at its MiniLake-correct default (False) —
+    key-unique MERGE source from apply_batch under a default
+    ``ApplyConfig`` — the pre-reduce is routed from the table's flag, so
     the safeguard is structural, not a docstring."""
     from pyspark.sql import functions as F
 
@@ -145,7 +145,6 @@ def test_apply_batch_forces_pre_reduce_for_unique_source_sinks(spark, tmp_path):
     )
     t = FakeUniqueSourceTable(str(tmp_path))
     cfg = ApplyConfig()
-    assert cfg.pre_reduce is False  # the MiniLake-correct default
     res = apply_batch(t, batch, batch_id=0, cfg=cfg)
     assert not res.skipped
     (rows,) = t.captured

@@ -123,7 +123,7 @@ def test_crash_resume_exactly_once(spark, tmp_path):
     _assert_state_equal(_engine_state(table), _oracle_state(cfg))
 
 
-def test_hot_key_skew_salted_path(spark, tmp_path):
+def test_hot_key_skew_salted_path(spark, tmp_path, monkeypatch):
     cfg = GenConfig(
         n_events=30_000, batch_size=10_000, n_conversations=500,
         hot_key_fraction=0.9,
@@ -131,12 +131,14 @@ def test_hot_key_skew_salted_path(spark, tmp_path):
     changelog = str(tmp_path / "changelog")
     write_changelog(cfg, changelog)
     table = _fresh_table(spark, tmp_path)
+    # every batch probed (cadence 1) and found hot → salted reduce
+    calls = _count_probes(monkeypatch, verdict=True, every=1)
     replay_files(
-        spark, changelog, table,
-        cfg=ApplyConfig(force_salted=True, assert_unique_keys=True),
+        spark, changelog, table, cfg=ApplyConfig(assert_unique_keys=True),
     )
     _assert_state_equal(_engine_state(table), _oracle_state(cfg))
     recs = [r for r in LineageLog(table.root).records() if not r.get("skipped_fenced")]
+    assert len(calls) == len(recs) == 3
     assert all(r["salted_reduce"] for r in recs)
 
 
@@ -217,15 +219,18 @@ def test_apply_batch_names_missing_required_columns(spark, tmp_path):
 
 
 # ------------------------------------------------------------------ sticky
-# skew probe (ApplyConfig.skew_probe_every): the sampling job re-runs on a
+# skew probe (pipeline.SKEW_PROBE_EVERY): the sampling job re-runs on a
 # cadence per stream, its verdict reused in between — skew is a property of
 # the stream, and the per-batch probe was an extra full-scan job per batch.
 
 
-def _count_probes(monkeypatch, verdict: bool):
-    """Patch pipeline.detect_hot_keys with a counting stub."""
+def _count_probes(monkeypatch, verdict: bool, every: int):
+    """Open the probe's size gate for every batch, set the probe cadence
+    to ``every`` and patch pipeline.detect_hot_keys with a counting stub."""
     import etl_pipeline_spark.pipeline as pl
 
+    monkeypatch.setattr(pl, "SKEW_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(pl, "SKEW_PROBE_EVERY", every)
     calls = []
 
     def fake(df, keys, threshold):
@@ -237,30 +242,24 @@ def _count_probes(monkeypatch, verdict: bool):
 
 
 def test_sticky_skew_probe_cadence(spark, tmp_path, monkeypatch):
-    calls = _count_probes(monkeypatch, verdict=False)
+    calls = _count_probes(monkeypatch, verdict=False, every=2)
     cfg = GenConfig(n_events=10_000, batch_size=2_000)
     changelog = str(tmp_path / "changelog")
     write_changelog(cfg, changelog)
     table = _fresh_table(spark, tmp_path)
-    replay_files(
-        spark, changelog, table,
-        cfg=ApplyConfig(skew_probe_min_bytes=0, skew_probe_every=2),
-    )
+    replay_files(spark, changelog, table)
     # 5 batches, cadence 2 -> probed on batches 0, 2, 4 only
     assert len(calls) == 3
     _assert_state_equal(_engine_state(table), _oracle_state(cfg))
 
 
 def test_sticky_probe_salted_verdict_reused(spark, tmp_path, monkeypatch):
-    calls = _count_probes(monkeypatch, verdict=True)
+    calls = _count_probes(monkeypatch, verdict=True, every=4)
     cfg = GenConfig(n_events=10_000, batch_size=2_000)
     changelog = str(tmp_path / "changelog")
     write_changelog(cfg, changelog)
     table = _fresh_table(spark, tmp_path)
-    replay_files(
-        spark, changelog, table,
-        cfg=ApplyConfig(skew_probe_min_bytes=0, skew_probe_every=4),
-    )
+    replay_files(spark, changelog, table)
     # probed on 0 and 4; batches 1-3 reuse the salted verdict without a job
     assert len(calls) == 2
     recs = [
@@ -274,12 +273,90 @@ def test_sticky_probe_salted_verdict_reused(spark, tmp_path, monkeypatch):
 def test_direct_apply_batch_probes_every_batch(spark, tmp_path, monkeypatch):
     # no memo (direct caller) -> legacy probe-every-batch behavior, and
     # cadence 1 with a driver memo behaves identically
-    calls = _count_probes(monkeypatch, verdict=False)
+    calls = _count_probes(monkeypatch, verdict=False, every=1)
     cfg = GenConfig(n_events=10_000, batch_size=2_000)
     changelog = str(tmp_path / "changelog")
     write_changelog(cfg, changelog)
-    replay_files(
-        spark, changelog, _fresh_table(spark, tmp_path),
-        cfg=ApplyConfig(skew_probe_min_bytes=0, skew_probe_every=1),
-    )
+    replay_files(spark, changelog, _fresh_table(spark, tmp_path))
     assert len(calls) == 5
+
+
+# A table whose merge must see every event (MiniLakeTable.needs_every_event)
+# is never pre-collapsed, so apply_batch must not pay for a skew probe on it,
+# even with the size gate open and a probe that would answer "hot".
+# Batch: key a/0 is inserted, then updated twice (the last update carries a
+# role the constraint table rejects and no text), b/1 is inserted once, and
+# one null-key event is a dead letter.
+_PER_EVENT_ROWS = [
+    ("a", 0, "user", "  first  ", 1, "I"),
+    ("a", 0, None, "second", 2, "U"),
+    ("a", 0, "gremlin", None, 3, "U"),
+    ("b", 1, "user", "x", 4, "I"),
+    (None, 0, "user", "dead", 5, "I"),
+]
+
+
+@pytest.mark.parametrize(
+    "kind,create_kw,expected,fused",
+    [
+        # column-coalescing: a null payload column means "not provided"
+        ("partial", {"merge_engine": "partial"},
+         {("a", 0): ("gremlin", "second"), ("b", 1): ("user", "x")}, False),
+        # whole-row LWW; the lineage check below covers the births
+        ("row_lineage", {"row_lineage": True},
+         {("a", 0): ("gremlin", None), ("b", 1): ("user", "x")}, True),
+        # filter-then-LWW: the violating last update is diverted, the key
+        # keeps its last valid image
+        ("dead_letter", {},
+         {("a", 0): (None, "second"), ("b", 1): ("user", "x")}, True),
+    ],
+    ids=["partial", "row_lineage", "dead_letter"],
+)
+def test_per_event_tables_are_never_probed(
+    spark, tmp_path, monkeypatch, kind, create_kw, expected, fused
+):
+    from etl_pipeline_spark.pipeline import apply_batch
+
+    calls = _count_probes(monkeypatch, verdict=True, every=1)
+    merge_kwargs = []
+    real_merge = MiniLakeTable.merge
+
+    def spy(self, source, *args, **kwargs):
+        merge_kwargs.append(kwargs)
+        return real_merge(self, source, *args, **kwargs)
+
+    monkeypatch.setattr(MiniLakeTable, "merge", spy)
+    table = MiniLakeTable.create(
+        spark, str(tmp_path / "table"), TRANSCRIPT_SCHEMA_V0, key_cols=KEYS,
+        n_buckets=4, write_mode="mor", **create_kw,
+    )
+    if kind == "dead_letter":
+        table.add_constraint("role_ok", "role <> 'gremlin'",
+                             mode="dead_letter")
+    assert table.needs_every_event
+    # file-backed, so the probe's size gate (now 0 bytes) sees the batch
+    spark.createDataFrame(
+        _PER_EVENT_ROWS,
+        "conv_id string, turn_idx int, role string, text string, "
+        "lsn long, op string",
+    ).write.parquet(str(tmp_path / "batch"))
+    res = apply_batch(table, spark.read.parquet(str(tmp_path / "batch")), 0)
+
+    assert not res.skipped
+    assert calls == []
+    (kw,) = merge_kwargs
+    assert ("valid_col" in kw) is fused
+    (rec,) = LineageLog(table.root).records()
+    assert rec["salted_reduce"] is False
+    assert rec["dead_lettered"] == 1
+    state = {
+        (r["conv_id"], r["turn_idx"]): (r["role"], r["text"])
+        for r in table.read().collect()
+    }
+    assert state == expected
+    if kind == "row_lineage":
+        births = {
+            (r["conv_id"], r["turn_idx"]): r["birth_lsn"]
+            for r in table.read_lineage().collect()
+        }
+        assert births == {("a", 0): 1, ("b", 1): 4}

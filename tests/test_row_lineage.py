@@ -32,7 +32,7 @@ SCHEMA = T.StructType(
     ]
 )
 
-CFG = ApplyConfig(clean_cols=(), use_pandas_udf=False)
+CFG = ApplyConfig(clean_cols=())
 
 
 def _table(spark, root, **kw):
