@@ -112,6 +112,12 @@ ROW_LINEAGE_PROP = "engine.row-lineage"  # bool: carry _birth_lsn/_tomb_lsn
 TABLE_STATS_PROP = "engine.table-stats"  # ANALYZE output (Puffin analog)
 SKETCH_STATS_PROP = "engine.table-sketches"  # incremental HLL NDV blobs
 
+# Column types whose Parquet footer min/max decode to the column's own
+# Python values (MiniLakeTable._encode_stat_bound passes them through).
+_RAW_BOUND_TYPES = (
+    T.StringType, T.IntegralType, T.FloatType, T.DoubleType, T.BooleanType,
+)
+
 # Maintenance rewrites whose output is key-unique per bucket (they all
 # rewrite the RESOLVED state). Every resolved-snapshot decision — the
 # fold-skip read, per-file scan planning, expire_rows safety, the audit's
@@ -273,7 +279,12 @@ def _spread_expr(bucket_ids: list[int], n_parts: int, dead_token: bool = False):
     """Column mapping each bucket id to the spread token of its
     partition. Bucket ids get ranks in sorted order and rank r goes to
     partition r mod ``n_parts``; ``dead_token=True`` ranks
-    :data:`DEAD_BUCKET` rows after the real buckets."""
+    :data:`DEAD_BUCKET` rows after the real buckets. One array lookup
+    indexed by bucket id (length max id + 1) serves dense and sparse
+    domains alike — no per-bucket CASE chain for codegen to inline.
+    Callers place only the buckets their rows hold: an id outside
+    ``bucket_ids`` reads a filler slot, or fails the lookup past the
+    largest id."""
     ordered = sorted(bucket_ids)
     tokens = _spread_tokens(n_parts)
 
@@ -282,20 +293,13 @@ def _spread_expr(bucket_ids: list[int], n_parts: int, dead_token: bool = False):
 
     if not ordered:
         return tok(0).cast("int")
-    expr = None
+    rank_of = {b: r for r, b in enumerate(ordered)}
+    arr = F.array(*[tok(rank_of.get(b, 0)) for b in range(ordered[-1] + 1)])
+    expr = F.element_at(arr, F.col(BUCKET_COL) + 1)
     if dead_token:
-        expr = F.when(F.col(BUCKET_COL) == DEAD_BUCKET, tok(len(ordered)))
-    if ordered == list(range(len(ordered))):
-        # dense 0..n-1 domain: O(1) array lookup instead of a CASE chain
-        arr = F.array(*[tok(r) for r in range(len(ordered))])
-        dense = F.element_at(arr, F.col(BUCKET_COL) + 1)
-        expr = expr.otherwise(dense) if expr is not None else dense
-        return expr.cast("int")
-    for rank, b in enumerate(ordered):
-        hit = F.col(BUCKET_COL) == b
-        expr = F.when(hit, tok(rank)) if expr is None else expr.when(
-            hit, tok(rank)
-        )
+        expr = F.when(
+            F.col(BUCKET_COL) == DEAD_BUCKET, tok(len(ordered))
+        ).otherwise(expr)
     return expr.cast("int")
 
 
@@ -511,12 +515,15 @@ class MiniLakeTable:
                 "unavailable by design"
             ) from None
 
-    def _earliest_version(self) -> int | None:
-        versions = [
+    def _versions(self) -> list[int]:
+        """Every committed manifest version still on disk, ascending."""
+        return sorted(
             int(os.path.basename(p)[1:-5])
             for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-        ]
-        return min(versions) if versions else None
+        )
+
+    def _earliest_version(self) -> int | None:
+        return next(iter(self._versions()), None)
 
     def _write_manifest(self, manifest: dict) -> None:
         """CAS-commit a manifest: O_EXCL create of the version file (lose
@@ -1644,12 +1651,8 @@ class MiniLakeTable:
         """Largest committed version with ``committed_at <= ts`` (Iceberg
         ``TIMESTAMP AS OF`` analog). Raises if the table is younger than
         ``ts`` reaches back (or retention GC dropped the snapshots)."""
-        versions = sorted(
-            int(os.path.basename(p)[1:-5])
-            for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-        )
         best = None
-        for v in versions:
+        for v in self._versions():
             if self.manifest(v).get("committed_at", 0) <= ts:
                 best = v
         if best is None:
@@ -1947,10 +1950,7 @@ class MiniLakeTable:
             # control-plane pattern as the point-lookup planner
             bounds: list[tuple[int, int, int]] = []
             prev = -1
-            for v in sorted(
-                int(os.path.basename(p)[1:-5])
-                for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-            ):
+            for v in self._versions():
                 try:
                     mv = self.manifest(v)
                 except Exception:
@@ -2008,8 +2008,8 @@ class MiniLakeTable:
         stats = m.get("file_stats", {})
 
         def _may_contain(d: str) -> bool:
-            s = stats.get(d)
-            if not s:
+            s = stats.get(d) or {}
+            if "key_min" not in s:
                 return True
             try:
                 return any(
@@ -2503,24 +2503,19 @@ class MiniLakeTable:
         )
 
     def history(self) -> list[dict]:
-        versions = sorted(
-            int(os.path.basename(p)[1:-5])
-            for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-        )
-        return [self.manifest(v) for v in versions]
+        return [self.manifest(v) for v in self._versions()]
 
     # --------------------------------------------------------- file stats
 
     @staticmethod
     def _encode_stat_bound(value):
         """JSON-serializable, order-preserving encoding of a footer
-        min/max value: numerics and strings pass through, timestamps
-        become epoch MICROS, dates become ordinal days. None = this
-        value cannot be encoded (readers then keep the file)."""
+        min/max value: numerics (booleans included) and strings pass
+        through, timestamps become epoch MICROS, dates become ordinal
+        days. None = this value cannot be encoded (readers then keep
+        the file)."""
         import datetime
 
-        if isinstance(value, bool):
-            return None
         if isinstance(value, (int, float, str)):
             return value
         if isinstance(value, datetime.datetime):
@@ -2536,27 +2531,32 @@ class MiniLakeTable:
 
     @staticmethod
     def _collect_dir_stats(
-        bucket_dir: str, key0: str, stats_pcols: tuple[str, ...] = ()
+        bucket_dir: str, pkey0: str | None, stats_pcols: tuple[str, ...] = ()
     ) -> dict | None:
-        """Iceberg-manifest-style per-file column bounds for a freshly
-        written bucket dir: min/max of the primary key and ``_lsn`` plus
-        the row count, read from the Parquet FOOTERS (driver-side, no
-        Spark job — O(part files) metadata fetches per commit). Returns
-        None when any footer lacks usable min/max (readers then simply
-        keep the dir — pruning is an optimization, never a correctness
-        dependency).
+        """Iceberg-manifest-style stats for a freshly written bucket dir,
+        decoded from its Parquet FOOTERS by :meth:`_file_col_bounds`
+        (driver-side, no Spark job — O(part files) metadata fetches per
+        commit): the row count plus the min/max of the primary key
+        (``pkey0``; None = the key type has no raw-comparable footer
+        bounds) and of ``_lsn`` over the dir's files. A bound any file
+        leaves unknown is omitted (readers then keep the dir — pruning
+        is an optimization, never a correctness dependency). None when
+        the dir has no readable footer.
 
         For each declared stats column (:meth:`set_stats_columns`,
         passed here under its PHYSICAL name) a per-FILE ``"files"`` map
-        records ``[min, max]`` bounds (``"empty"`` = the column is
-        all-null in that file, so no value can fall in any range; a
+        records the decoded ``[min, max]`` / ``"empty"`` bounds (a
         missing entry = unknown, readers keep the file — the
         initial-default read path can materialize values for files that
-        physically lack a column, so absence must never prune)."""
+        physically lack a column, so absence must never prune), plus
+        ``"__file_meta__": {"nulls": {pcol: n}, "tomb": bool}`` so
+        :meth:`expire_rows` can prove whole-file DROPS from the manifest
+        alone (bounds prove keeps, but a drop also needs no-nulls +
+        no-tombstones); each entry is omitted when unknown."""
         import pyarrow.parquet as pq
 
-        key_min = key_max = lsn_min = lsn_max = None
         rows = 0
+        decoded: list[dict] = []
         files: dict[str, dict] = {}
         try:
             names = [
@@ -2566,103 +2566,84 @@ class MiniLakeTable:
                 return None
             for name in names:
                 md = pq.read_metadata(os.path.join(bucket_dir, name))
-                schema_names = [
-                    md.schema.column(i).name for i in range(md.num_columns)
-                ]
-                ki = schema_names.index(key0)
-                li = schema_names.index(LSN_COL)
                 rows += md.num_rows
-                for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    ks = row_group.column(ki).statistics
-                    ls = row_group.column(li).statistics
-                    if (
-                        ks is None or not ks.has_min_max
-                        or ls is None or not ls.has_min_max
-                    ):
-                        return None
-                    if not isinstance(ks.min, (str, int, float)):
-                        return None  # keep manifests JSON-serializable
-                    if any(
-                        isinstance(v, float) and math.isnan(v)
-                        for v in (ks.min, ks.max)
-                    ):
-                        # NaN key bounds (double key column with NaN
-                        # values): same poison as the secondary-column
-                        # bounds below — no stats beats wrong pruning
-                        return None
-                    key_min = ks.min if key_min is None else min(key_min, ks.min)
-                    key_max = ks.max if key_max is None else max(key_max, ks.max)
-                    lsn_min = ls.min if lsn_min is None else min(lsn_min, ls.min)
-                    lsn_max = ls.max if lsn_max is None else max(lsn_max, ls.max)
-                if stats_pcols:
-                    files[name] = MiniLakeTable._file_col_bounds(
-                        md, schema_names, stats_pcols
-                    )
+                bounds, nulls, tomb = MiniLakeTable._file_col_bounds(
+                    md, (pkey0, LSN_COL, *stats_pcols)
+                )
+                decoded.append(bounds)
+                if not stats_pcols:
+                    continue
+                fb = {c: bounds[c] for c in stats_pcols if c in bounds}
+                meta: dict = {}
+                if any(c in nulls for c in fb):
+                    meta["nulls"] = {c: nulls[c] for c in fb if c in nulls}
+                if tomb is not None:
+                    meta["tomb"] = tomb
+                if meta:
+                    fb["__file_meta__"] = meta
+                files[name] = fb
         except Exception:
             return None
-        if key_min is None:
-            return None
-        out = {
-            "key_min": key_min, "key_max": key_max,
-            "lsn_min": int(lsn_min), "lsn_max": int(lsn_max),
-            "rows": int(rows),
-        }
+        out: dict = {}
+        for pcol, lo, hi in (
+            (pkey0, "key_min", "key_max"), (LSN_COL, "lsn_min", "lsn_max")
+        ):
+            bs = [b.get(pcol) for b in decoded]
+            if all(isinstance(b, list) for b in bs):
+                out[lo] = min(b[0] for b in bs)
+                out[hi] = max(b[1] for b in bs)
+        out["rows"] = int(rows)
         if stats_pcols:
             out["files"] = files
         return out
 
     @staticmethod
     def _file_col_bounds(
-        md, schema_names: list[str], stats_pcols: tuple[str, ...]
-    ) -> dict:
-        """One file's ``{pcol: [min, max] | "empty"}`` bounds map. A
-        column the footer lacks, or whose statistics are unusable for
-        ANY row group, is simply absent (= unknown, never pruned).
+        md, pcols: tuple[str | None, ...]
+    ) -> tuple[dict, dict, bool | None]:
+        """The one decoder of Parquet footer statistics: a single walk
+        over the row groups of footer ``md`` for the physical columns
+        ``pcols``. Every stats consumer derives from its output — the
+        manifest's per-dir key/``_lsn`` bounds and per-file declared
+        map (:meth:`_collect_dir_stats`) and :meth:`expire_rows`' file
+        verdicts. Returns ``(bounds, nulls, tomb)``:
 
-        Additionally records ``"__file_meta__": {"nulls": {pcol: n},
-        "tomb": bool}`` — per-column null counts and a has-tombstones
-        flag — so :meth:`expire_rows` can prove whole-file DROPS from
-        the manifest alone instead of re-opening every live footer
-        serially on the driver (bounds prove keeps, but a drop also
-        needs no-nulls + no-tombstones). Readers that only look up
-        queried pcols (plan_box_scan) ignore the extra key; entries are
-        omitted when unknown, which degrades to the footer walk."""
+        - ``bounds[pcol]``: ``[min, max]`` in the order-preserving
+          :meth:`_encode_stat_bound` encoding, or ``"empty"`` when the
+          column is all-null in the file. A column the footer lacks, or
+          whose statistics are unusable in ANY row group, is absent
+          (= unknown, never pruned).
+        - ``nulls[pcol]``: the file's null count, for bounded columns
+          whose every row group reports one.
+        - ``tomb``: whether the file holds tombstones (None = unknown)."""
         enc = MiniLakeTable._encode_stat_bound
-        out: dict = {}
-        meta_nulls: dict = {}
-        for pcol in stats_pcols:
-            if pcol not in schema_names:
-                continue
-            ci = schema_names.index(pcol)
-            mn = mx = None
-            usable = True
-            n_vals = 0
-            null_total: int | None = 0
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
+        names = md.schema.names
+        cols = {c: names.index(c) for c in pcols if c in names}
+        lo: dict = {}
+        hi: dict = {}
+        nulls: dict = dict.fromkeys(cols, 0)
+        di = names.index(DELETED_COL) if DELETED_COL in names else None
+        tomb = None if di is None else False
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for c, ci in list(cols.items()):
+                st = g.column(ci).statistics
                 if st is None:
-                    usable = False
-                    break
-                if null_total is not None and st.null_count is not None:
-                    null_total += st.null_count
+                    del cols[c]
+                    continue
+                if nulls[c] is not None and st.null_count is not None:
+                    nulls[c] += st.null_count
                 else:
-                    null_total = None  # unknown anywhere → unknown overall
-                n_vals += (st.num_values or 0) if st.num_values is not None else 0
+                    nulls[c] = None  # unknown anywhere → unknown overall
                 if not st.has_min_max:
                     # no bounds in this row group: fine ONLY if it holds
                     # no values at all (all-null) — otherwise unknown
                     if st.num_values:
-                        usable = False
-                        break
+                        del cols[c]
                     continue
-                emn, emx = enc(st.min), enc(st.max)
-                if emn is None or emx is None:
-                    usable = False
-                    break
-                if any(
-                    isinstance(v, float) and math.isnan(v)
-                    for v in (emn, emx)
+                mn, mx = enc(st.min), enc(st.max)
+                if mn is None or mx is None or any(
+                    isinstance(v, float) and math.isnan(v) for v in (mn, mx)
                 ):
                     # parquet-mr computes double bounds with Java's total
                     # order, where NaN sorts above everything — a chunk
@@ -2672,40 +2653,22 @@ class MiniLakeTable:
                     # would WRONGLY prune even though its finite values
                     # match). Bounds containing NaN are unusable: leave
                     # the column absent = unknown = never pruned.
-                    usable = False
-                    break
-                mn = emn if mn is None else min(mn, emn)
-                mx = emx if mx is None else max(mx, emx)
-            if not usable:
-                continue
-            if mn is None:
-                out[pcol] = "empty" if n_vals == 0 else None
-                if out[pcol] is None:
-                    del out[pcol]
-            else:
-                out[pcol] = [mn, mx]
-            if pcol in out and null_total is not None:
-                meta_nulls[pcol] = int(null_total)
-        tomb: bool | None = None
-        if DELETED_COL in schema_names:
-            di = schema_names.index(DELETED_COL)
-            tomb = False
-            for rg in range(md.num_row_groups):
-                ds = md.row_group(rg).column(di).statistics
+                    del cols[c]
+                    continue
+                lo[c] = mn if c not in lo else min(lo[c], mn)
+                hi[c] = mx if c not in hi else max(hi[c], mx)
+            if tomb is False:
+                ds = g.column(di).statistics
                 if ds is None or not ds.has_min_max:
                     tomb = None  # unknown
-                    break
-                if ds.max:
+                elif ds.max:
                     tomb = True
-                    break
-        meta: dict = {}
-        if meta_nulls:
-            meta["nulls"] = meta_nulls
-        if tomb is not None:
-            meta["tomb"] = tomb
-        if meta and "__file_meta__" not in out:
-            out["__file_meta__"] = meta
-        return out
+        bounds = {c: [lo[c], hi[c]] if c in lo else "empty" for c in cols}
+        return (
+            bounds,
+            {c: nulls[c] for c in cols if nulls[c] is not None},
+            tomb,
+        )
 
     def _stats_for_manifest(
         self, base: dict, new_dirs: list[str], new_buckets: dict, key0: str
@@ -2716,11 +2679,16 @@ class MiniLakeTable:
         live file set."""
         stats = dict(base.get("file_stats", {}))
         # footers store the PHYSICAL column name
-        to_phys = {
-            f.name: physical_name(f)
-            for f in schema_from_manifest(base["schema"]).fields
-        }
-        pkey0 = to_phys.get(key0, key0)
+        fields = schema_from_manifest(base["schema"]).fields
+        to_phys = {f.name: physical_name(f) for f in fields}
+        # dir key bounds are compared with raw key values
+        # (read_for_keys), so they are recorded only for key types whose
+        # footer bounds decode to the key values themselves
+        raw_key = any(
+            f.name == key0 and isinstance(f.dataType, _RAW_BOUND_TYPES)
+            for f in fields
+        )
+        pkey0 = to_phys[key0] if raw_key else None
         stats_pcols = tuple(
             to_phys[c]
             for c in base.get("properties", {}).get(STATS_COLS_PROP, [])
@@ -3989,10 +3957,7 @@ class MiniLakeTable:
         Returns counts of removed manifests/dirs and skipped young
         orphans."""
         keep_last = max(int(keep_last), 1)
-        versions = sorted(
-            int(os.path.basename(p)[1:-5])
-            for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-        )
+        versions = self._versions()
         # tag refs pin their snapshots past the keep_last horizon,
         # exactly Iceberg expire_snapshots honoring named refs; branch
         # refs pin their BASE snapshot the same way (a branch read folds
@@ -4156,76 +4121,63 @@ class MiniLakeTable:
                     "retry expire_rows"
                 )
         version = base["version"]
-        enc = self._encode_stat_bound
+        fstats = base.get("file_stats", {})
 
-        def _classify(path: str) -> tuple[str, frozenset | None]:
-            """('drop'|'keep'|'boundary', footer column set) from the
-            parquet footer — driver-side metadata only, no task
-            launched. The column set lets the caller protect the
+        def _classify(d: str, name: str) -> tuple[str, frozenset | None]:
+            """('drop'|'keep'|'boundary', footer column set) of one file
+            — driver-side metadata only, no task launched. One rule over
+            the file's ``pcol`` bounds, null count and tombstone flag,
+            read from the manifest's per-file stats when they record
+            ``pcol`` bounds (no footer opened: the dir's one memoized
+            column set stands in — a dir is written by one job), else
+            decoded from the footer. Bounds prove keeps directly (null
+            and tombstone rows are retained anyway); a drop also needs
+            no nulls and no tombstones; unknown bounds are a boundary.
+            The column set lets the caller protect the
             one-footer-schema-per-dir invariant hardlinks could break."""
-            try:
-                md = pq.read_metadata(path)
-            except Exception:
-                return "boundary", None
-            names = [
-                md.schema.column(i).name for i in range(md.num_columns)
-            ]
-            colset = frozenset(names)
-            if pcol not in names:
-                # pre-add file: every ROW reads the column's
-                # initial-default (or null) — but the file may still
-                # hold TOMBSTONES, which must be retained, so a
-                # below-cutoff default can never whole-file drop
-                dflt = initial_default(field)
-                if dflt is None:
-                    return "keep", colset  # all-null → retained
-                _, enc_d = self._norm_bound(field, dflt)
+            fb = (fstats.get(d, {}).get("files") or {}).get(name) or {}
+            if pcol in fb:
+                meta = fb.get("__file_meta__") or {}
+                b = fb[pcol]
+                n_null = (meta.get("nulls") or {}).get(pcol)
+                tomb = meta.get("tomb")
+                colset = self._dir_physical_cols(d) or None
+            else:
                 try:
-                    return (
-                        ("boundary", colset)
-                        if enc_d < enc_cutoff
-                        else ("keep", colset)
-                    )
-                except TypeError:
-                    return "boundary", colset
-            ci = names.index(pcol)
-            di = names.index(DELETED_COL) if DELETED_COL in names else None
-            droppable = True
-            keepable = True
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                st = g.column(ci).statistics
-                if st is None:
-                    return "boundary", colset
-                n_vals = st.num_values
-                if not st.has_min_max:
-                    if n_vals:  # values exist but no bounds → unknown
+                    md = pq.read_metadata(os.path.join(d, name))
+                except Exception:
+                    return "boundary", None
+                colset = frozenset(md.schema.names)
+                if pcol not in colset:
+                    # pre-add file: every ROW reads the column's
+                    # initial-default (or null) — but the file may still
+                    # hold TOMBSTONES, which must be retained, so a
+                    # below-cutoff default can never whole-file drop
+                    dflt = initial_default(field)
+                    if dflt is None:
+                        return "keep", colset  # all-null → retained
+                    _, enc_d = self._norm_bound(field, dflt)
+                    try:
+                        return (
+                            ("boundary", colset)
+                            if enc_d < enc_cutoff
+                            else ("keep", colset)
+                        )
+                    except TypeError:
                         return "boundary", colset
-                    droppable = False  # all-null group: rows retained
-                    continue
-                emn, emx = enc(st.min), enc(st.max)
-                if emn is None or emx is None or any(
-                    isinstance(v, float) and math.isnan(v)
-                    for v in (emn, emx)
-                ):
-                    return "boundary", colset
-                try:
-                    if not (emx < enc_cutoff):
-                        droppable = False
-                    if not (emn >= enc_cutoff):
-                        keepable = False
-                except TypeError:
-                    return "boundary", colset
-                if st.null_count is None or st.null_count > 0:
-                    droppable = False  # null rows are retained
-                if di is not None:
-                    ds = g.column(di).statistics
-                    if ds is None or not ds.has_min_max or ds.max:
-                        droppable = False  # tombstones are retained
-            if droppable:
-                return "drop", colset
-            if keepable:
-                return "keep", colset
+                bounds, nulls, tomb = self._file_col_bounds(md, (pcol,))
+                b, n_null = bounds.get(pcol), nulls.get(pcol)
+            if b is None:
+                return "boundary", colset
+            if b == "empty":
+                return "keep", colset  # all-null: every row retained
+            try:
+                if b[0] >= enc_cutoff:
+                    return "keep", colset
+                if b[1] < enc_cutoff and n_null == 0 and tomb is False:
+                    return "drop", colset
+            except TypeError:
+                pass
             return "boundary", colset
 
         # the boundary-rewrite job writes the FULL current physical
@@ -4237,40 +4189,6 @@ class MiniLakeTable:
         canonical = frozenset(
             f.name for f in self.physical_read_schema(version).fields
         )
-        def _from_manifest(dir_files: dict | None, name: str) -> str | None:
-            """'keep' / 'drop' when the manifest's per-file stats prove
-            it, else None (→ open the footer). Bounds prove keeps
-            directly (nulls/tombstones are retained anyway); a drop
-            additionally needs the recorded no-nulls + no-tombstones
-            metadata. This makes the classification phase O(boundary
-            files) footer reads on a clustered layout instead of a
-            serial driver walk over EVERY live footer."""
-            if not dir_files:
-                return None
-            fb = dir_files.get(name)
-            if fb is None:
-                return None
-            cb = fb.get(pcol)
-            if cb is None:
-                return None
-            if cb == "empty":
-                return "keep"  # all-null: every row retained
-            mn, mx = cb
-            try:
-                if mn >= enc_cutoff:
-                    return "keep"
-                meta = fb.get("__file_meta__") or {}
-                if (
-                    mx < enc_cutoff
-                    and (meta.get("nulls") or {}).get(pcol) == 0
-                    and meta.get("tomb") is False
-                ):
-                    return "drop"
-            except TypeError:
-                return None
-            return None
-
-        fstats = base.get("file_stats", {})
         dropped: list[str] = []
         linked: list[tuple[str, int]] = []  # (path, bucket)
         boundary: dict[str, list[str]] = {}  # dir -> file paths
@@ -4279,21 +4197,11 @@ class MiniLakeTable:
             b = int(b_str)
             plan: list[tuple[str, str, frozenset | None]] = []
             for d in dirs:
-                dir_files = fstats.get(d, {}).get("files")
                 for name in sorted(os.listdir(d)):
-                    if not name.endswith(".parquet"):
-                        continue
-                    path = os.path.join(d, name)
-                    mcls = _from_manifest(dir_files, name)
-                    if mcls is not None:
-                        # one memoized footer per DIR for the column-set
-                        # (a dir is written by one job → one schema)
+                    if name.endswith(".parquet"):
                         plan.append(
-                            (path, mcls, self._dir_physical_cols(d) or None)
+                            (os.path.join(d, name), *_classify(d, name))
                         )
-                        continue
-                    cls, colset = _classify(path)
-                    plan.append((path, cls, colset))
             if all(cls == "keep" for _, cls, _cs in plan):
                 continue  # bucket untouched, dirs survive byte-identical
             touched.add(b)
@@ -4488,10 +4396,7 @@ class MiniLakeTable:
         )
         verified = None
         if verify:
-            versions = sorted(
-                int(os.path.basename(p)[1:-5])
-                for p in glob.glob(os.path.join(self.meta_dir, "v*.json"))
-            )
+            versions = self._versions()
             leftover = 0
             for v in versions:
                 leftover += (

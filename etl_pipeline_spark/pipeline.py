@@ -79,6 +79,21 @@ class ApplyConfig:
     lineage_level: str = "batch"
 
 
+def new_payload_fields(
+    fields, known, cfg: ApplyConfig
+) -> list[T.StructField]:
+    """The payload fields among a change-event batch's ``fields`` whose
+    names are not in ``known`` — the columns in-flight evolution adds.
+    The event columns (``cfg.lsn_col``, ``cfg.op_col``, ``source_part``)
+    and engine-internal ``_``-prefixed names are never payload."""
+    reserved = {cfg.lsn_col, cfg.op_col, "source_part"}
+    return [
+        f for f in fields
+        if f.name not in known and f.name not in reserved
+        and not f.name.startswith("_")
+    ]
+
+
 def _normalize_dead_letters(
     dead: DataFrame,
     key_cols: list[str],
@@ -328,14 +343,9 @@ def apply_batch(
     #    doesn't know yet → ALTER TABLE ADD COLUMN before the merge.
     #    Diffed per batch, never cached at stream start (the stream
     #    outlives the schema change — SURVEY.md §7).
-    table_cols = {f.name for f in table.schema().fields}
-    reserved = {cfg.lsn_col, cfg.op_col, "source_part"}
-    batch_payload_fields = [
-        f
-        for f in batch_df.schema.fields
-        if f.name not in table_cols and f.name not in reserved
-        and not f.name.startswith("_")
-    ]
+    batch_payload_fields = new_payload_fields(
+        batch_df.schema.fields, set(table.schema().fieldNames()), cfg
+    )
     if batch_payload_fields:
         if to_branch is not None:
             # branch writes resolve against the branch's BASE snapshot

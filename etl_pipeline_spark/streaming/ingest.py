@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..lake.lineage import LineageLog
 from ..lake.minilake import MiniLakeTable
-from ..pipeline import ApplyConfig, apply_batch
+from ..pipeline import ApplyConfig, apply_batch, new_payload_fields
 from ..schema import CHANGE_EVENT_SCHEMA
 from ..sources.changelog import list_batch_files, read_events, read_events_stream
 
@@ -188,18 +188,16 @@ def run_ingest_stream_evolving(
     the discovered schema. Returns the number of restarts taken.
 
     Core columns (``cfg.lsn_col``/``cfg.op_col``/``source_part``) and
-    engine-internal ``_``-prefixed names never count as births — same
-    reserved set as ``apply_batch``/``_replay_pipelined``.
+    engine-internal ``_``-prefixed names never count as births — the
+    :func:`~etl_pipeline_spark.pipeline.new_payload_fields` rule
+    ``apply_batch``/``_replay_pipelined`` use.
     """
     cfg = cfg or ApplyConfig()
     lineage = LineageLog(table.root)
     stream_id = f"ckpt:{os.path.abspath(checkpoint_dir)}"
+    event_payload = new_payload_fields(CHANGE_EVENT_SCHEMA.fields, (), cfg)
     core = T.StructType(
-        [
-            f
-            for f in CHANGE_EVENT_SCHEMA.fields
-            if f.name in (cfg.lsn_col, cfg.op_col, "source_part")
-        ]
+        [f for f in CHANGE_EVENT_SCHEMA.fields if f not in event_payload]
     )
     table_payload = [
         T.StructField(f.name, f.dataType, True)
@@ -503,19 +501,12 @@ def _replay_pipelined(
         pending: list = []
         for batch_id, group in todo:
             df = read_fn(group)
-            table_cols = {f.name for f in table.schema().fields}
-            # same reserved set apply_batch uses — derived from cfg, so a
-            # renamed lsn/op column neither skips the drain (racing an
-            # in-flight predecessor's add_columns) nor forces a spurious
-            # full drain every batch
-            reserved = {cfg.lsn_col, cfg.op_col, "source_part"}
-            births = [
-                f.name
-                for f in df.schema.fields
-                if f.name not in table_cols
-                and f.name not in reserved
-                and not f.name.startswith("_")
-            ]
+            # apply_batch's own rule, so a renamed lsn/op column neither
+            # skips the drain (racing an in-flight predecessor's
+            # add_columns) nor forces a spurious full drain every batch
+            births = new_payload_fields(
+                df.schema.fields, set(table.schema().fieldNames()), cfg
+            )
             if births:  # drain: evolution must see a quiesced table
                 for fut in pending:
                     fut.result()

@@ -335,11 +335,12 @@ def test_engine_guard(spark, tmp_path):
 def test_manifest_stats_fast_path_matches_footer_walk(
     spark, tmp_path, monkeypatch
 ):
-    """With ``set_stats_columns`` declared, expire_rows classifies most
-    files from the manifest's per-file bounds + null/tombstone metadata
-    and only opens BOUNDARY footers — same drops/links/rewrites and the
-    same surviving rows as the pure footer walk, with strictly fewer
-    driver-side footer reads."""
+    """With ``set_stats_columns`` declared, expire_rows classifies every
+    file from the manifest's per-file bounds + null/tombstone metadata
+    — same drops/links/rewrites and the same surviving rows as the pure
+    footer walk, with strictly fewer driver-side footer reads. No file
+    whose bounds the manifest records is opened for its verdict; the
+    one column-set read per dir stays."""
     rows = [
         (i, "I", f"c{i}", i, f"v{i}", _ts(1 + i % 28), float(i))
         for i in range(1, 400)
@@ -357,11 +358,14 @@ def test_manifest_stats_fast_path_matches_footer_walk(
 
         import pyarrow.parquet as pq
 
+        base = t.manifest()
         calls = {"n": 0}
+        opened: list[str] = []
         real = pq.read_metadata
 
         def counting(path, *a, **kw):
             calls["n"] += 1
+            opened.append(path)
             return real(path, *a, **kw)
 
         monkeypatch.setattr(pq, "read_metadata", counting)
@@ -369,6 +373,18 @@ def test_manifest_stats_fast_path_matches_footer_walk(
         monkeypatch.setattr(pq, "read_metadata", real)
         assert sorted(t.read().collect()) == want
         results[mode] = (res, calls["n"])
+        if mode == "manifest":
+            for ds in base["buckets"].values():
+                for d in ds:
+                    bounded = {
+                        os.path.join(d, n)
+                        for n, fb in base["file_stats"][d]["files"].items()
+                        if "ts" in fb
+                    }
+                    assert bounded
+                    assert sum(p in bounded for p in opened) <= 1, (
+                        d, opened
+                    )
 
     (res_f, n_f), (res_m, n_m) = results["footer"], results["manifest"]
     for k in ("files_dropped", "files_linked", "files_rewritten"):

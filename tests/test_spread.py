@@ -130,6 +130,29 @@ def test_spread_expr_packs_buckets_evenly(spark, n_parts, kind):
     assert max(load) - min(load) <= 1, load
 
 
+def test_spread_expr_sparse_domain_is_one_lookup(spark):
+    """A sparse domain (a partial compaction's touched buckets) indexes
+    the token array by bucket id like a dense one: each bucket lands at
+    its rank mod P, and the plan holds no per-bucket CASE chain."""
+    ids = list(range(1, 8192, 2))
+    n_parts = 8
+    df = (
+        spark.createDataFrame([(b,) for b in ids], f"{BUCKET_COL} int")
+        .withColumn(SPREAD_COL, _spread_expr(ids, n_parts))
+    )
+    plan = df._jdf.queryExecution().analyzed().toJSON()
+    assert "expressions.ElementAt" in plan
+    assert "expressions.CaseWhen" not in plan
+    got = (
+        df.repartition(n_parts, F.col(SPREAD_COL))
+        .select(BUCKET_COL, F.spark_partition_id().alias("p"))
+        .collect()
+    )
+    assert len(got) == len(ids)
+    part_of = {r[BUCKET_COL]: r["p"] for r in got}
+    assert part_of == {b: r % n_parts for r, b in enumerate(ids)}
+
+
 def test_place_buckets_sizes_to_task_slots(spark):
     """P = min(#buckets (+1 dead), defaultParallelism)."""
     slots = spark.sparkContext.defaultParallelism
@@ -139,8 +162,9 @@ def test_place_buckets_sizes_to_task_slots(spark):
     assert _place_buckets(df, list(range(32))).rdd.getNumPartitions() == min(
         32, slots
     )
+    # callers place only the buckets their rows hold
     assert _place_buckets(
-        df, [3, 11], dead_token=True
+        df.filter(F.col(BUCKET_COL).isin(3, 11)), [3, 11], dead_token=True
     ).rdd.getNumPartitions() == min(3, slots)
 
 
